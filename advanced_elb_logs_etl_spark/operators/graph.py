@@ -413,9 +413,16 @@ def k_hop_reachability(
     graphs the two diverge by the whole graph size within a few hops.
     The per-seed reach count folds every hop's raw pair stream through
     ONE count_distinct aggregation (map-side partial dedup) instead of
-    a full distinct pass per hop plus a final count.  Lineage stays
-    k-deep (k is small and fixed — for iterate-to-convergence walks
-    use pagerank's checkpoint discipline).
+    a full distinct pass per hop plus a final count.
+
+    Small-k contract: nothing is checkpointed between hops, and each
+    exact frontier embeds the previous frontier twice (inside the hop
+    join and in its anti-join) plus the one before it, so the logical
+    plan grows ~(1+sqrt(2))^k nodes, not k.  That is cheap at the
+    catalog's k=2 (plan 661 -> 800 lines) but a k~10 caller would pay
+    minutes of analysis and planning on the driver — keep k small, and
+    for iterate-to-convergence walks use pagerank's checkpoint
+    discipline.
 
     ``broadcast_frontier``: when the caller KNOWS the seed set (and so
     every hop's frontier) is dimension-bounded — the seed-restricted

@@ -238,43 +238,6 @@ def q_gopher_rules_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rules.rule_filter_battery(_t(spark, sf_dir, "documents"))
 
 # ---------------------------------------------------------------------------
-# Streaming stash pre-validation (this r8 session, future window slots).
-# Both entries run REAL micro-batch jobs through the replay harness
-# (3 staged single-file batches, availableNow) and were hash-identical
-# against the plain-SQL oracles below at sf0.01:
-#
-# 1. stream_heavy_hitters — Misra-Gries at capacity 64 >= |event_type|
-#    cardinality = the EXACT regime (cnt_lower == cnt_upper == count):
-#      got = heavyhitters.replay_heavy_hitters(
-#          spark, events.filter("event_type IS NOT NULL")
-#                       .select("event_id", "event_type"),
-#          "event_type", capacity=64, num_batches=3, order_col="event_id")
-#      oracle (5/5 rows green):
-#        SELECT event_type AS key, count(*)::BIGINT AS cnt_lower,
-#               count(*)::BIGINT AS cnt_upper
-#        FROM events WHERE event_type IS NOT NULL GROUP BY 1
-#
-# 2. stream_latency_histogram — log-bucketed exact counts over
-#    round(value*100)::BIGINT (negatives/null dropped by bucket_of):
-#      got = histogram.replay_histogram(spark, ev_with_v, "v",
-#                                       num_batches=3, order_col="event_id")
-#      oracle (104/104 buckets green), with S = histogram.SUBBUCKETS = 8:
-#        WITH vals AS (SELECT round(value * 100)::BIGINT AS v FROM events),
-#        bk AS (SELECT CASE WHEN v IS NULL OR v < 0 THEN NULL
-#                           WHEN v = 0 THEN -1
-#                           ELSE (strlen(bin(v)) - 1) * 8
-#                                + floor((v - power(2, strlen(bin(v)) - 1)) * 8
-#                                        / power(2, strlen(bin(v)) - 1))::BIGINT
-#                      END AS bucket FROM vals)
-#        SELECT bucket, count(*)::BIGINT AS cnt FROM bk
-#        WHERE bucket IS NOT NULL GROUP BY 1
-#
-# With these, every stash candidate except pq_adc_topk (whose gate will be
-# a bounded recall check like ivf_cosine_topk, designed at registration
-# time) has a pre-rehearsed, table-bound oracle on file.
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
 # pq_adc_topk gate design (pre-validated this r8 session — the last stash
 # candidate without an oracle on file).  Same bounded-recall shape as
 # ivf_cosine_topk: the gate computes ADC top-10 for the 4 query vectors

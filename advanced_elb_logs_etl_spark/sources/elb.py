@@ -42,5 +42,7 @@ def read_alb_lines(
     reader = reader.option("ignoreCorruptFiles", "true")
     if isinstance(paths, str):
         paths = [paths]
-    df = reader.text(*paths)
+    # the list as ONE argument: text()'s later positionals are options
+    # (wholetext, lineSep, ...), so text(*paths) misreads a second path
+    df = reader.text(paths)
     return df.withColumn(source_col, F.input_file_name())

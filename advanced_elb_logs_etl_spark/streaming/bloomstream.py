@@ -1,7 +1,7 @@
 """Streaming Bloom first-seen dedup: the batch operator
 (operators/bloom.bloom_first_seen_flags) maintained across
-micro-batches with the bounded, restart-safe parquet store of
-streaming/cmstream.py — bounded-memory approximate dedup of an
+micro-batches in the bounded, restart-safe snapshot store of
+streaming/store.py — bounded-memory approximate dedup of an
 unbounded key stream (Broder & Mitzenmacher 2004), where exact
 first-seen dedup (streaming/neardup.py) would have to keep every key
 ever seen.
@@ -24,13 +24,12 @@ per-item flags are slicing-invariant (an item's flag depends only on
 bits set by strictly-earlier items, which are all in its own or prior
 batches), so one batch SQL twin covers every replay geometry.
 
-Store layout under ``store_dir``: ``bits/batch=N`` holds the CUMULATIVE
-(bit, t_first) state as of batch N; ``flags/batch=N`` holds that
-batch's 1-row flag summary (n_items, n_bloom_dup) — summaries are
-per-batch facts, so the cumulative snapshot is the concatenation of all
-prior summaries plus this batch's.  Reads follow the cmstream contract
-(latest snapshot strictly before batch_id, overwrite-idempotent writes,
-superseded snapshots pruned, directory-listing snapshot selection).
+Store: two parts in the cumulative-snapshot store (streaming/store.py
+holds the contract): ``bits/batch=N`` holds the cumulative (bit,
+t_first) state as of batch N; ``flags/batch=N`` holds one
+(src_batch, n_items, n_bloom_dup) summary row per processed batch —
+summaries are per-batch facts, so the cumulative snapshot is the prior
+summaries plus this batch's.
 
 Scale shape (100 TB/day stream): per micro-batch one k-way explode +
 hash agg over the batch (map-side combinable to <= m_bits rows), a
@@ -40,16 +39,17 @@ one <= m_bits-row write.  Nothing ever rescans history.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import bloom
+from .replay import detached, replay_store
+from .store import Fold, attach, read_current
 
 __all__ = [
     "bloom_batch_step",
+    "bloom_fold",
     "bloom_stream",
     "current_bloom_state",
     "current_bloom_summary",
@@ -137,35 +137,19 @@ def bloom_batch_step(
     return batch_bits, flags
 
 
-def _read_prior(
-    spark: SparkSession, path: str, schema: T.StructType, before_batch: int
-) -> DataFrame | None:
-    from .store import read_latest_snapshot
-
-    return read_latest_snapshot(spark, path, schema, before_batch)
-
-
-def _process_batch(
+def _bloom_step(
     batch_df: DataFrame,
     batch_id: int,
-    store_dir: str,
+    prior: dict,
     key_col: str,
     order_col: str,
     k: int,
     m_bits: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe: reads batches <
-    batch_id, overwrite-idempotent writes, superseded snapshots pruned —
-    the cmstream contract for BOTH stores)."""
-    from .cmstream import _prune_history
-
-    spark = batch_df.sparkSession
-    bits_dir = os.path.join(store_dir, "bits")
-    flags_dir = os.path.join(store_dir, "flags")
-    prev_bits = _read_prior(spark, bits_dir, BITS_SCHEMA, batch_id)
-    prev_flags = _read_prior(spark, flags_dir, FLAGS_SCHEMA, batch_id)
+) -> dict:
+    """The store step: fold the bits and append this batch's flag
+    summary to the prior summaries."""
     new_bits, flags = bloom_batch_step(
-        batch_df, prev_bits, key_col, order_col, k, m_bits
+        batch_df, prior["bits"], key_col, order_col, k, m_bits
     )
     summary = flags.agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -175,18 +159,26 @@ def _process_batch(
         "n_items",
         "n_bloom_dup",
     )
-    if prev_flags is not None:
+    if prior["flags"] is not None:
         summary = summary.unionByName(
-            prev_flags.select("src_batch", "n_items", "n_bloom_dup")
+            prior["flags"].select("src_batch", "n_items", "n_bloom_dup")
         )
-    new_bits.write.mode("overwrite").parquet(
-        os.path.join(bits_dir, f"batch={batch_id}")
+    return {"bits": new_bits, "flags": summary}
+
+
+def bloom_fold(
+    key_col: str,
+    order_col: str,
+    k: int = bloom.DEDUP_K,
+    m_bits: int = bloom.DEDUP_M_BITS,
+) -> Fold:
+    """The dedup's store declaration: ``bits`` then ``flags``."""
+    return Fold(
+        {"bits": BITS_SCHEMA, "flags": FLAGS_SCHEMA},
+        lambda batch_df, bid, prior: _bloom_step(
+            batch_df, bid, prior, key_col, order_col, k, m_bits
+        ),
     )
-    summary.write.mode("overwrite").parquet(
-        os.path.join(flags_dir, f"batch={batch_id}")
-    )
-    _prune_history(spark, bits_dir, batch_id)
-    _prune_history(spark, flags_dir, batch_id)
 
 
 def bloom_stream(
@@ -197,46 +189,27 @@ def bloom_stream(
     k: int = bloom.DEDUP_K,
     m_bits: int = bloom.DEDUP_M_BITS,
 ):
-    """Attach the dedup fold to a streaming frame; returns a configured
-    DataStreamWriter (caller adds trigger/checkpoint and starts it).
-    One store per checkpoint lineage.  See the module ORDER CONTRACT."""
+    """Attach the dedup fold to a streaming frame (store.attach).  See
+    the module ORDER CONTRACT."""
     if k < 1 or k > 6:
         raise ValueError(f"k must be in [1, 6], got {k}")
     if m_bits < 2:
         raise ValueError(f"m_bits must be >= 2, got {m_bits}")
     _check_order_integral(stream, order_col)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch(
-            batch_df, batch_id, store_dir, key_col, order_col, k, m_bits
-        )
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    return attach(stream, store_dir, *bloom_fold(key_col, order_col, k, m_bits))
 
 
 def current_bloom_state(spark: SparkSession, store_dir: str) -> DataFrame:
     """The latest cumulative (bit, t_first) state (<= m_bits rows) —
     inject it into bloom_first_seen_flags(first_set=...) to flag a new
     batch offline, or min-merge with another store's state."""
-    bits = _read_prior(
-        spark, os.path.join(store_dir, "bits"), BITS_SCHEMA, 2**31 - 1
-    )
-    if bits is None:
-        return spark.createDataFrame([], "bit long, t_first long")
-    return bits.select("bit", "t_first")
+    return read_current(spark, store_dir, "bits", BITS_SCHEMA)
 
 
 def current_bloom_summary(spark: SparkSession, store_dir: str) -> DataFrame:
     """Per-batch flag summaries so far: (src_batch, n_items,
     n_bloom_dup), one row per processed batch."""
-    flags = _read_prior(
-        spark, os.path.join(store_dir, "flags"), FLAGS_SCHEMA, 2**31 - 1
-    )
-    if flags is None:
-        return spark.createDataFrame(
-            [], "src_batch int, n_items long, n_bloom_dup long"
-        )
-    return flags.select("src_batch", "n_items", "n_bloom_dup")
+    return read_current(spark, store_dir, "flags", FLAGS_SCHEMA)
 
 
 def replay_bloom(
@@ -247,62 +220,16 @@ def replay_bloom(
     k: int = bloom.DEDUP_K,
     m_bits: int = bloom.DEDUP_M_BITS,
     num_batches: int = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the streaming dedup (real
-    micro-batch engine: staged parquet source, foreachBatch sink,
-    availableNow trigger) and return the per-batch summaries.  Batches
-    are ORDER-ALIGNED (repartitionByRange on order_col), so the summed
-    flags equal the batch operator's on the whole frame."""
-    _check_order_integral(df, order_col)
-    import shutil
-    import tempfile
-    import time as _time
-
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_bloom_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = bloom_stream(stream, store, key_col, order_col, k, m_bits)
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"bloom replay did not drain within {timeout_sec}s —"
-                " refusing to read a partially-populated store"
-            )
-        final = current_bloom_summary(spark, store)
-        rows = final.collect()  # materialize before the store dir is removed
-        return spark.createDataFrame(
-            rows, "src_batch int, n_items long, n_bloom_dup long"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Replay a batch frame through the streaming dedup
+    (replay.replay_store) and return the per-batch summaries.  Batches
+    are ORDER-ALIGNED (sliced by order_col), so the summed flags equal
+    the batch operator's on the whole frame."""
+    return replay_store(
+        spark, df,
+        lambda stream, store: bloom_stream(
+            stream, store, key_col, order_col, k, m_bits
+        ),
+        lambda store: detached(current_bloom_summary(spark, store)),
+        num_batches, order_col,
+    )

@@ -1,6 +1,6 @@
 """Streaming Count-Min sketch: the batch CM operator
-(operators/cmsketch.py) maintained across micro-batches with the
-bounded, restart-safe parquet store of streaming/histogram.py.
+(operators/cmsketch.py) maintained across micro-batches in the
+bounded, restart-safe snapshot store of streaming/store.py.
 
 Because CM cells are plain sums, the cumulative streamed sketch equals
 the single-pass batch sketch WHATEVER the micro-batch slicing (the
@@ -8,15 +8,12 @@ mergeable-summaries contract, Agarwal et al. 2012) — so the operator is
 value-exact-checkable against the batch SQL twin at ANY geometry, like
 the histogram and unlike compacting summaries.
 
-Store layout under ``store_dir``: ``cells/batch=N`` holds the
-CUMULATIVE (row, bucket, cnt) sketch as of batch N (<= depth*width
-rows, so full-state rewrite per batch is cheaper than a delta
-protocol); reads filter ``batch < batch_id`` (retry-safe), writes are
-overwrite-idempotent.  No empty-batch sentinel is needed (the
-heavy-hitters ADVICE-r8 class): cell counts are MONOTONE — an empty
-batch partition implies every prior batch was empty too, so the
-row-derived latest-prior read is always correct (the histogram.py
-adjudication, same reasoning).
+Store: one ``cells`` part in the cumulative-snapshot store
+(streaming/store.py holds the contract); <= depth*width rows, so a
+full-state rewrite per batch is cheaper than a delta protocol.  No
+empty-batch sentinel is needed (the heavy-hitters ADVICE-r8 class):
+cell counts are MONOTONE — an empty batch partition implies every prior
+batch was empty too (the histogram.py adjudication, same reasoning).
 
 Scale shape (100 TB/day stream): per micro-batch one depth-way explode
 + ONE map-side-combinable hash agg onto <= d*w cells, a union with the
@@ -27,20 +24,21 @@ cell-wise sum (cmsketch.cm_merge).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import cmsketch as cm
+from .replay import detached, replay_store
+from .store import Fold, attach, read_current
 
 __all__ = [
     "cm_batch_step",
+    "cm_fold",
     "cm_stream",
     "current_sketch",
     "replay_cm",
     "cm_grouped_batch_step",
+    "cm_fold_grouped",
     "cm_stream_grouped",
     "current_sketch_grouped",
     "replay_cm_grouped",
@@ -75,82 +73,16 @@ def cm_batch_step(
     return cells
 
 
-def _read_prior(
-    spark: SparkSession, path: str, before_batch: int
-) -> DataFrame | None:
-    """Latest cumulative snapshot strictly before ``before_batch``.
-    Delegates to store.read_latest_snapshot: the batch is selected from
-    the directory listing and ONLY that partition is scanned, so a
-    concurrent _prune_history can never fail a live read (ADVICE r10)
-    and the read stays O(1) directories however long the stream runs.
-    Missing store == no prior state; transient FS errors propagate
-    (the r9 contract — silently dropping prior counts would break the
-    one-sided estimate)."""
-    from .store import read_latest_snapshot
-
-    return read_latest_snapshot(spark, path, CELLS_SCHEMA, before_batch)
-
-
-def _prune_history(spark: SparkSession, path: str, batch_id: int) -> None:
-    """Best-effort removal of superseded snapshots so the store stays
-    bounded on a long-lived stream (ADVICE r9: each batch writes a full
-    cumulative snapshot, so without pruning the store and the reader's
-    scan grow linearly with batch count).
-
-    Retry safety: a retried batch N reads the LATEST batch < N, so the
-    newest prior snapshot M must survive until a batch AFTER N commits —
-    only batches < M are deleted (keeping exactly M and N).  Deletion is
-    an optimization, never a correctness input, so failures here are
-    swallowed: an undeleted snapshot just means a larger store.
-
-    Shared by every CUMULATIVE-snapshot store (cmstream, kmvstream,
-    heavyhitters summary+meta, histogram counts).  NOT applicable to
-    DELTA stores whose reads union ALL prior batches — the neardup
-    first-seen key store is one; pruning it would un-block seen keys."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return
-        batches = []
-        for st in fs.listStatus(hpath):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("batch="):
-                try:
-                    batches.append((int(name.split("=", 1)[1]), st.getPath()))
-                except ValueError:
-                    continue
-        prior = [b for b, _ in batches if b < batch_id]
-        if not prior:
-            return
-        keep = max(prior)
-        for b, p in batches:
-            if b < keep:
-                fs.delete(p, True)
-    except Exception:  # pragma: no cover - best-effort cleanup only
-        pass
-
-
-def _process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    key_col: str,
-    width: int,
-    depth: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe: reads batches <
-    batch_id, overwrite-idempotent write — the neardup/heavyhitters/
-    histogram contract).  After a successful write, snapshots older
-    than the newest prior one are pruned (see _prune_history)."""
-    cells_dir = os.path.join(store_dir, "cells")
-    prev = _read_prior(batch_df.sparkSession, cells_dir, batch_id)
-    out = cm_batch_step(batch_df, prev, key_col, width, depth)
-    out.write.mode("overwrite").parquet(
-        os.path.join(cells_dir, f"batch={batch_id}")
+def cm_fold(
+    key_col: str = "key", width: int = cm.WIDTH, depth: int = cm.DEPTH
+) -> Fold:
+    """The sketch's store declaration: one ``cells`` part."""
+    return Fold(
+        {"cells": CELLS_SCHEMA},
+        lambda batch_df, _bid, prior: {
+            "cells": cm_batch_step(batch_df, prior["cells"], key_col, width, depth)
+        },
     )
-    _prune_history(batch_df.sparkSession, cells_dir, batch_id)
 
 
 def cm_stream(
@@ -160,26 +92,17 @@ def cm_stream(
     width: int = cm.WIDTH,
     depth: int = cm.DEPTH,
 ):
-    """Attach the sketch to a streaming frame; returns a configured
-    DataStreamWriter (caller adds trigger/checkpoint and starts it).
-    One store per checkpoint lineage."""
+    """Attach the sketch to a streaming frame (store.attach)."""
     if width < 1 or depth < 1:
         raise ValueError(f"width/depth must be >= 1, got {width}/{depth}")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch(batch_df, batch_id, store_dir, key_col, width, depth)
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    return attach(stream, store_dir, *cm_fold(key_col, width, depth))
 
 
 def current_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
     """The latest cumulative (row, bucket, cnt) sketch — feed it to
     cmsketch.cm_estimate for point queries, or cm_merge to combine with
     other stores."""
-    cells = _read_prior(spark, os.path.join(store_dir, "cells"), 2**31 - 1)
-    if cells is None:
-        return spark.createDataFrame([], "row int, bucket int, cnt bigint")
-    return cells
+    return read_current(spark, store_dir, "cells", CELLS_SCHEMA)
 
 
 def replay_cm(
@@ -190,62 +113,16 @@ def replay_cm(
     depth: int = cm.DEPTH,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the streaming sketch (real
-    micro-batch engine: staged parquet source, foreachBatch sink,
-    availableNow trigger) and return the final cumulative cells — which
+    """Replay a batch frame through the streaming sketch
+    (replay.replay_store) and return the final cumulative cells — which
     equal cm_build of the whole frame whatever the slicing."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or key_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_cm_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = cm_stream(stream, store, key_col, width, depth)
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"CM replay did not drain within {timeout_sec}s — refusing "
-                "to read a partially-populated store"
-            )
-        final = current_sketch(spark, store)
-        rows = final.collect()  # materialize before the store dir is removed
-        return spark.createDataFrame(rows, "row int, bucket int, cnt bigint")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+    return replay_store(
+        spark, df,
+        lambda stream, store: cm_stream(stream, store, key_col, width, depth),
+        lambda store: detached(current_sketch(spark, store)),
+        num_batches, order_col or key_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -253,20 +130,19 @@ def replay_cm(
 # per-hour/per-source token-frequency screens that stay queryable while
 # the stream runs (cmsketch.cm_estimate_grouped), roll up across groups
 # (cmsketch.cm_merge_grouped; cells are plain sums), and merge across
-# stores.  Same monotone cumulative snapshot store as the global form;
-# a batch missing a group carries that group's cells forward verbatim.
+# stores.  A batch missing a group carries its cells forward verbatim.
 # State is <= depth*width rows PER GROUP (caller bounds group
 # cardinality: hours, sources, tenants), independent of stream length.
 # ---------------------------------------------------------------------------
 
 
-def _grouped_cells_schema(spark: SparkSession, groups_ddl: str) -> T.StructType:
+def _grouped_cells_schema(groups_ddl: str) -> T.StructType:
     """State schema for the grouped store: the caller's group columns
     (DDL string, e.g. "hour string") + (row int, bucket int, cnt long,
     batch int)."""
-    return spark.createDataFrame(
-        [], f"{groups_ddl}, row int, bucket int, cnt long, batch int"
-    ).schema
+    return T.DataType.fromDDL(
+        f"{groups_ddl}, row int, bucket int, cnt long, batch int"
+    )
 
 
 def cm_grouped_batch_step(
@@ -291,33 +167,23 @@ def cm_grouped_batch_step(
     return cells
 
 
-def _process_batch_grouped(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
+def cm_fold_grouped(
     group_cols: list[str],
     groups_ddl: str,
-    key_col: str,
-    width: int,
-    depth: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe: reads batches <
-    batch_id via the single-partition snapshot read, overwrite-
-    idempotent write, superseded snapshots pruned)."""
-    from .store import read_latest_snapshot
-
-    spark = batch_df.sparkSession
-    cells_dir = os.path.join(store_dir, "cells")
-    prev = read_latest_snapshot(
-        spark, cells_dir, _grouped_cells_schema(spark, groups_ddl), batch_id
+    key_col: str = "key",
+    width: int = cm.WIDTH,
+    depth: int = cm.DEPTH,
+) -> Fold:
+    """The grouped sketch's store declaration: one ``cells`` part whose
+    schema leads with the group columns (``groups_ddl``)."""
+    return Fold(
+        {"cells": _grouped_cells_schema(groups_ddl)},
+        lambda batch_df, _bid, prior: {
+            "cells": cm_grouped_batch_step(
+                batch_df, prior["cells"], group_cols, key_col, width, depth
+            )
+        },
     )
-    out = cm_grouped_batch_step(
-        batch_df, prev, group_cols, key_col, width, depth
-    )
-    out.write.mode("overwrite").parquet(
-        os.path.join(cells_dir, f"batch={batch_id}")
-    )
-    _prune_history(spark, cells_dir, batch_id)
 
 
 def cm_stream_grouped(
@@ -329,22 +195,18 @@ def cm_stream_grouped(
     width: int = cm.WIDTH,
     depth: int = cm.DEPTH,
 ):
-    """Attach the per-group sketch to a streaming frame; returns a
-    configured DataStreamWriter (caller adds trigger/checkpoint and
-    starts it).  ``groups_ddl`` declares the group columns' types for
-    the store reads.  One store per checkpoint lineage."""
+    """Attach the per-group sketch to a streaming frame (store.attach).
+    ``groups_ddl`` declares the group columns' types for the store
+    reads."""
     if width < 1 or depth < 1:
         raise ValueError(f"width/depth must be >= 1, got {width}/{depth}")
     if not group_cols:
         raise ValueError("group_cols must be non-empty; use cm_stream")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch_grouped(
-            batch_df, batch_id, store_dir, group_cols, groups_ddl,
-            key_col, width, depth,
-        )
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    return attach(
+        stream,
+        store_dir,
+        *cm_fold_grouped(group_cols, groups_ddl, key_col, width, depth),
+    )
 
 
 def current_sketch_grouped(
@@ -354,19 +216,9 @@ def current_sketch_grouped(
     bucket, cnt) — feed them to cmsketch.cm_estimate_grouped for
     per-group point estimates or cm_merge_grouped to roll up / merge
     stores."""
-    from .store import read_latest_snapshot
-
-    cells = read_latest_snapshot(
-        spark,
-        os.path.join(store_dir, "cells"),
-        _grouped_cells_schema(spark, groups_ddl),
-        2**31 - 1,
+    return read_current(
+        spark, store_dir, "cells", _grouped_cells_schema(groups_ddl)
     )
-    if cells is None:
-        return spark.createDataFrame(
-            [], f"{groups_ddl}, row int, bucket int, cnt long"
-        )
-    return cells
 
 
 def replay_cm_grouped(
@@ -379,62 +231,15 @@ def replay_cm_grouped(
     depth: int = cm.DEPTH,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the grouped streaming sketch (real
-    micro-batch engine) and return the final per-group cells — which
-    equal cm_build_grouped of the whole frame whatever the slicing."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or key_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_gcm_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = cm_stream_grouped(
+    """Replay a batch frame through the grouped streaming sketch and
+    return the final per-group cells — which equal cm_build_grouped of
+    the whole frame whatever the slicing."""
+    return replay_store(
+        spark, df,
+        lambda stream, store: cm_stream_grouped(
             stream, store, group_cols, groups_ddl, key_col, width, depth
-        )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"grouped CM replay did not drain within {timeout_sec}s — "
-                "refusing to read a partially-populated store"
-            )
-        final = current_sketch_grouped(spark, store, groups_ddl)
-        rows = final.collect()  # materialize before the store dir is removed
-        return spark.createDataFrame(
-            rows, f"{groups_ddl}, row int, bucket int, cnt long"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+        ),
+        lambda store: detached(current_sketch_grouped(spark, store, groups_ddl)),
+        num_batches, order_col or key_col,
+    )

@@ -20,22 +20,26 @@ cnt - d, and both d and the running total D ride the plan as 1-row
 broadcast scalar stitches (no driver collect anywhere in the batch
 step).
 
-Store layout under ``store_dir`` (the first-seen-dedup conventions,
-streaming/neardup.py):
-  - ``summary/batch=N``: the full compacted summary as of batch N
-    (cumulative state, so only the LATEST prior partition is read),
+Store: two parts in the cumulative-snapshot store (streaming/store.py
+holds the contract), declared — and therefore written — in this order:
+  - ``meta/batch=N``: one row (d_total) — kept separate from the summary
+    so the bound survives even a compaction that empties the summary.
+    It is written FIRST: the two writes are not atomic, and a reader
+    pairing a batch-N summary with a batch-N-1 d_total would UNDERSTATE
+    cnt_upper (bound violation), while meta-N with summary-N-1 merely
+    overstates D — bound-safe;
+  - ``summary/batch=N``: the full compacted summary as of batch N,
     PLUS one sentinel row ``(key=NULL, cnt=-1)`` written on every batch
     so a compaction that legitimately empties the summary still leaves
     batch N visible in row space (real rows always have cnt >= 1, so
     the sentinel is unambiguous and readers drop it with ``cnt > 0``).
     Without it, both the latest-prior read and the reader's consistent
     cut — which derive "batch N exists" from rows — would silently fall
-    back to the stale batch N-1 state (ADVICE r8);
-  - ``meta/batch=N``: one row (d_total) — kept separate from the summary
-    so the bound survives even a compaction that empties the summary.
-Writes are batch-id-keyed with overwrite (idempotent retries), and reads
-filter ``batch < batch_id`` so a retried batch sees exactly the state
-its first attempt saw (the ADVICE-r6 retry-safety contract).
+    back to the stale batch N-1 state (ADVICE r8).
+current_heavy_hitters reads both parts at ONE consistent cut (ADVICE
+r7); pruning keeps {M, N} in each, so the max-common cut always lands
+on a surviving pair even across a mid-write crash (summary {M, N} /
+meta {L, M} cuts at M, which pruning never removes).
 
 Scale shape (100 TB/day stream): per micro-batch ONE exact hash agg over
 the batch (map-side combine), one union with the <= C-row prior summary,
@@ -53,8 +57,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .replay import detached, replay_store
+from .store import Fold, attach, list_batches, read_latest_snapshot
+
 __all__ = [
     "mg_batch_step",
+    "mg_fold",
     "heavy_hitters_stream",
     "current_heavy_hitters",
     "replay_heavy_hitters",
@@ -138,78 +146,31 @@ def mg_batch_step(
     return summary, meta
 
 
-def _read_prior(
-    spark: SparkSession, path: str, schema: T.StructType, before_batch: int
-) -> DataFrame | None:
-    """The LATEST ``batch=N`` partition strictly before ``before_batch``
-    (state is cumulative, older partitions are history), via
-    store.read_latest_snapshot: the batch is selected from the directory
-    listing and ONLY that partition is scanned — prune-race-free (ADVICE
-    r10) and O(1) directories per read.  Missing store == no prior
-    state; transient FS errors propagate (the r9 contract)."""
-    from .store import read_latest_snapshot
-
-    return read_latest_snapshot(spark, path, schema, before_batch)
-
-
-def _process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    key_col: str,
-    capacity: int,
-) -> None:
-    """One foreachBatch invocation (module-level so retry semantics are
-    unit-testable; same contract as neardup._first_seen_process_batch:
-    reads see only batches < batch_id, writes are overwrite-idempotent)."""
-    spark = batch_df.sparkSession
-    sum_dir = os.path.join(store_dir, "summary")
-    meta_dir = os.path.join(store_dir, "meta")
-    prev_summary = _read_prior(spark, sum_dir, SUMMARY_SCHEMA, batch_id)
+def _mg_step(
+    batch_df: DataFrame, prior: dict, key_col: str, capacity: int
+) -> dict:
+    """The store step: drop the prior summary's sentinel, merge and
+    compact, and append this batch's sentinel (module docstring)."""
+    prev_summary = prior["summary"]
     if prev_summary is not None:
-        # drop the empty-batch sentinel (key=NULL, cnt=-1); real rows
-        # always carry cnt >= 1 (compaction keeps cnt > d >= 0)
         prev_summary = prev_summary.filter(F.col("cnt") > 0)
-    prev_meta = _read_prior(spark, meta_dir, META_SCHEMA, batch_id)
     summary, meta = mg_batch_step(
-        batch_df, prev_summary, prev_meta, key_col, capacity
+        batch_df, prev_summary, prior["meta"], key_col, capacity
     )
-    # the summary plan feeds one write; meta's d rides the same TakeOrdered
-    # but its own write re-runs it — both frames are <= capacity+1 rows.
-    # meta is written FIRST: the two writes are not atomic, and a reader
-    # pairing a batch-N summary with a batch-N-1 d_total would UNDERSTATE
-    # cnt_upper (bound violation), while meta-N with summary-N-1 merely
-    # overstates D — bound-safe.  current_heavy_hitters additionally reads
-    # both stores at one consistent max-batch cut, so the gap state is
-    # never paired at all.
-    meta.write.mode("overwrite").parquet(
-        os.path.join(meta_dir, f"batch={batch_id}")
-    )
-    # every summary batch carries one sentinel row so a legitimately
-    # EMPTY compacted summary still commits a visible batch=N: the
-    # latest-prior read above and the reader's consistent cut both
-    # derive batch presence from rows, and an invisible empty batch
-    # would silently resurrect the stale batch-N-1 state (ADVICE r8:
-    # stale summary paired with stale d_total understates cnt_upper;
-    # worse, the NEXT batch would re-merge the already-compacted
-    # N-1 summary, inflating cnt above the true count).
-    sentinel = spark.range(1).select(
+    sentinel = batch_df.sparkSession.range(1).select(
         F.lit(None).cast("string").alias("key"),
         F.lit(-1).cast("long").alias("cnt"),
     )
-    summary.unionByName(sentinel).write.mode("overwrite").parquet(
-        os.path.join(sum_dir, f"batch={batch_id}")
-    )
-    # State is cumulative, so snapshots older than the newest prior one
-    # are dead weight — prune both dirs after the batch's writes complete
-    # (the cmstream ADVICE-r9 fix; keeps the retry-read predecessor M and
-    # batch N, so a retried N still reads M, and the reader's max-common
-    # cut always lands on a surviving pair even across a mid-write crash:
-    # summary {M,N} / meta {L,M} cuts at M, which pruning never removes).
-    from .cmstream import _prune_history
+    return {"meta": meta, "summary": summary.unionByName(sentinel)}
 
-    _prune_history(spark, sum_dir, batch_id)
-    _prune_history(spark, meta_dir, batch_id)
+
+def mg_fold(key_col: str = "key", capacity: int = 64) -> Fold:
+    """The summary's store declaration: ``meta`` then ``summary`` (the
+    write order is a correctness condition, module docstring)."""
+    return Fold(
+        {"meta": META_SCHEMA, "summary": SUMMARY_SCHEMA},
+        lambda batch_df, _bid, prior: _mg_step(batch_df, prior, key_col, capacity),
+    )
 
 
 def heavy_hitters_stream(
@@ -218,15 +179,9 @@ def heavy_hitters_stream(
     key_col: str = "key",
     capacity: int = 64,
 ):
-    """Attach the Misra-Gries summary to a streaming frame.  Returns a
-    configured ``DataStreamWriter`` (caller adds trigger/checkpoint and
-    ``.start()``s it).  Pair a store with exactly one checkpoint lineage
-    (the neardup store-reuse contract)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch(batch_df, batch_id, store_dir, key_col, capacity)
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    """Attach the Misra-Gries summary to a streaming frame
+    (store.attach)."""
+    return attach(stream, store_dir, *mg_fold(key_col, capacity))
 
 
 def current_heavy_hitters(
@@ -236,17 +191,8 @@ def current_heavy_hitters(
     bounds — true count in [cnt_lower, cnt_upper], any absent key's true
     count <= the store's d_total.  ``k`` keeps the top-k by lower bound
     (ties by key); None returns the whole summary."""
-    # Read BOTH stores at one consistent cut: the largest batch present
-    # in summary AND meta.  The two per-batch writes are not atomic, so
-    # each store's individual latest can differ by one mid-write (or
-    # after a crash between writes) — pairing across batches could
-    # understate cnt_upper (ADVICE r7).  The cut comes from the two
-    # DIRECTORY LISTINGS and only the two selected partitions are
-    # scanned (store.read_latest_snapshot — prune-race-free, ADVICE
-    # r10).  Missing store (never started) reads as empty; transient FS
-    # errors propagate rather than masquerade as an empty summary.
-    from .store import list_batches, read_latest_snapshot
-
+    # the cut comes from the two DIRECTORY LISTINGS and only the two
+    # selected partitions are scanned; a missing store reads as empty
     sum_dir = os.path.join(store_dir, "summary")
     meta_dir = os.path.join(store_dir, "meta")
     s_batches = list_batches(spark, sum_dir)
@@ -283,62 +229,13 @@ def replay_heavy_hitters(
     capacity: int = 64,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the streaming summary (real
-    micro-batch engine: staged parquet source, foreachBatch sink,
-    availableNow trigger) and return current_heavy_hitters of the final
-    store.  ``num_batches>1`` splits the input into single-file
-    micro-batches in ``order_col`` order (mtime-restamped part files, the
-    replay_first_seen_dedup device) for a deterministic arrival order."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or key_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_heavyhitters_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = heavy_hitters_stream(stream, store, key_col, capacity)
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"heavy-hitters replay did not drain within {timeout_sec}s "
-                "— refusing to read a partially-populated store"
-            )
-        result = current_heavy_hitters(spark, store)
-        # materialize before the store directory disappears
-        rows = result.collect()
-        return spark.createDataFrame(rows, result.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Replay a batch frame through the streaming summary
+    (replay.replay_store) and return current_heavy_hitters of the final
+    store."""
+    return replay_store(
+        spark, df,
+        lambda stream, store: heavy_hitters_stream(stream, store, key_col, capacity),
+        lambda store: detached(current_heavy_hitters(spark, store)),
+        num_batches, order_col or key_col,
+    )

@@ -24,16 +24,13 @@ floor is deterministic on every engine.  v == 0 gets the reserved bucket
 -1; negative/null values are the caller's error channel (dropped here,
 counted by the caller if they matter).
 
-Store layout under ``store_dir`` (the heavyhitters.py conventions):
-``counts/batch=N`` holds the CUMULATIVE (bucket, cnt) state as of batch
-N (state is O(octaves * S) ~ hundreds of rows, so full-state rewrite per
-batch is cheaper than a compaction protocol); reads filter
-``batch < batch_id`` (retry-safe), writes are overwrite-idempotent.
-No empty-batch sentinel is needed here (unlike the heavy-hitters
-summary, ADVICE r8): cumulative counts are MONOTONE — they never
-shrink — so a batch partition can only be empty if every prior batch
-was too, and a row-derived fallback to the latest non-empty batch
-always reads the correct latest state.
+Store: one ``counts`` part in the cumulative-snapshot store
+(streaming/store.py holds the contract).  State is O(octaves * S) ~
+hundreds of rows, so a full-state rewrite per batch is cheaper than a
+compaction protocol.  No empty-batch sentinel is needed (unlike the
+heavy-hitters summary, ADVICE r8): cumulative counts are MONOTONE —
+they never shrink — so a batch partition can only be empty if every
+prior batch was too, and the latest snapshot is always the right state.
 
 Scale shape (100 TB/day stream): per micro-batch one narrow projection +
 one hash agg onto <= 64*S buckets (map-side combine collapses the batch
@@ -50,10 +47,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .replay import detached, replay_store
+from .store import LATEST, Fold, attach, read_current, read_latest_snapshot
+
 __all__ = [
     "bucket_of",
     "bucket_bounds",
     "histogram_batch_step",
+    "histogram_fold",
     "histogram_stream",
     "quantile_estimates",
     "replay_histogram",
@@ -144,41 +145,14 @@ def histogram_batch_step(
     return counts
 
 
-def _read_prior(
-    spark: SparkSession, path: str, before_batch: int
-) -> DataFrame | None:
-    """Latest cumulative counts snapshot strictly before
-    ``before_batch`` via store.read_latest_snapshot (directory-listing
-    batch selection, single-partition scan — prune-race-free, ADVICE
-    r10).  Missing store == no prior state; transient FS errors
-    propagate (the r9 contract)."""
-    from .store import read_latest_snapshot
-
-    return read_latest_snapshot(spark, path, COUNTS_SCHEMA, before_batch)
-
-
-def _process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    value_col: str,
-    s: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe: reads batches <
-    batch_id, overwrite-idempotent write — the neardup/heavyhitters
-    contract)."""
-    counts_dir = os.path.join(store_dir, "counts")
-    prev = _read_prior(batch_df.sparkSession, counts_dir, batch_id)
-    out = histogram_batch_step(batch_df, prev, value_col, s)
-    out.write.mode("overwrite").parquet(
-        os.path.join(counts_dir, f"batch={batch_id}")
+def histogram_fold(value_col: str = "value", s: int = SUBBUCKETS) -> Fold:
+    """The histogram's store declaration: one ``counts`` part."""
+    return Fold(
+        {"counts": COUNTS_SCHEMA},
+        lambda batch_df, _bid, prior: {
+            "counts": histogram_batch_step(batch_df, prior["counts"], value_col, s)
+        },
     )
-    # cumulative snapshots: prune everything older than the retry-read
-    # predecessor (the cmstream ADVICE-r9 fix) so the store stays
-    # bounded on a long-lived stream
-    from .cmstream import _prune_history
-
-    _prune_history(batch_df.sparkSession, counts_dir, batch_id)
 
 
 def histogram_stream(
@@ -187,15 +161,9 @@ def histogram_stream(
     value_col: str = "value",
     s: int = SUBBUCKETS,
 ):
-    """Attach the histogram to a streaming frame; returns a configured
-    DataStreamWriter (caller adds trigger/checkpoint and starts it).
-    One store per checkpoint lineage."""
+    """Attach the histogram to a streaming frame (store.attach)."""
     _check_s(s)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch(batch_df, batch_id, store_dir, value_col, s)
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    return attach(stream, store_dir, *histogram_fold(value_col, s))
 
 
 def quantile_estimates(
@@ -213,8 +181,8 @@ def quantile_estimates(
     bad = [q for q in qs if not (0.0 < q <= 1.0)]
     if bad:
         raise ValueError(f"quantiles must be in (0, 1], got {bad}")
-    counts = _read_prior(
-        spark, os.path.join(store_dir, "counts"), 2**31 - 1
+    counts = read_latest_snapshot(
+        spark, os.path.join(store_dir, "counts"), COUNTS_SCHEMA, LATEST
     )
     if counts is None:
         return spark.createDataFrame(
@@ -260,61 +228,14 @@ def replay_histogram(
     s: int = SUBBUCKETS,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the streaming histogram (real
-    micro-batch engine, availableNow) and return the final cumulative
-    (bucket, cnt) state — which, because counts are exact and mergeable,
-    equals the single-pass batch bucketing whatever the slicing."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or value_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_hist_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = histogram_stream(stream, store, value_col, s)
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"histogram replay did not drain within {timeout_sec}s "
-                "— refusing to read a partially-populated store"
-            )
-        final = _read_prior(spark, os.path.join(store, "counts"), 2**31 - 1)
-        if final is None:
-            return spark.createDataFrame([], "bucket bigint, cnt bigint")
-        rows = final.collect()
-        return spark.createDataFrame(rows, "bucket bigint, cnt bigint")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Replay a batch frame through the streaming histogram
+    (replay.replay_store) and return the final cumulative (bucket, cnt)
+    state — which, because counts are exact and mergeable, equals the
+    single-pass batch bucketing whatever the slicing."""
+    return replay_store(
+        spark, df,
+        lambda stream, store: histogram_stream(stream, store, value_col, s),
+        lambda store: detached(read_current(spark, store, "counts", COUNTS_SCHEMA)),
+        num_batches, order_col or value_col,
+    )

@@ -1,6 +1,6 @@
 """Streaming K-Minimum-Values sketch: the batch KMV operator
-(operators/kmv.py) maintained across micro-batches with the bounded,
-restart-safe parquet store of streaming/cmstream.py.
+(operators/kmv.py) maintained across micro-batches in the bounded,
+restart-safe snapshot store of streaming/store.py.
 
 The k smallest distinct hashes of a growing set are a MONOTONE fold —
 union the prior minima with the batch's hashes, keep the k smallest —
@@ -10,14 +10,10 @@ WHATEVER the micro-batch slicing (mergeable summaries, Agarwal et al.
 twin at any geometry (the cmstream/histogram discipline, not a
 compacting summary like Misra-Gries).
 
-Store layout under ``store_dir``: ``hashes/batch=N`` holds the
-CUMULATIVE k-row minima set as of batch N; reads filter
-``batch < batch_id`` (retry-safe), writes are overwrite-idempotent,
-and snapshots older than the retry-read predecessor are pruned (the
-cmstream ADVICE-r9 fix, inherited here from day one).  No empty-batch
-sentinel is needed: the state is the full minima set, so an empty
-batch rewrites the prior state verbatim and the latest-prior read is
-always correct.
+Store: one ``hashes`` part in the cumulative-snapshot store
+(streaming/store.py holds the contract).  No empty-batch sentinel is
+needed: the state is the full minima set, so an empty batch rewrites
+the prior state verbatim.
 
 Scale shape (100 TB/day stream): per micro-batch one hash projection +
 distinct + TakeOrdered(k) over the batch, a union with the k-row prior,
@@ -28,20 +24,21 @@ result feeds kmv.kmv_estimate / kmv_intersect_estimate unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import kmv
+from .replay import detached, replay_store
+from .store import Fold, attach, read_current
 
 __all__ = [
     "kmv_batch_step",
+    "kmv_fold",
     "kmv_stream",
     "current_kmv",
     "replay_kmv",
     "kmv_grouped_batch_step",
+    "kmv_fold_grouped",
     "kmv_stream_grouped",
     "current_kmv_grouped",
     "replay_kmv_grouped",
@@ -73,39 +70,14 @@ def kmv_batch_step(
     )
 
 
-def _read_prior(
-    spark: SparkSession, path: str, before_batch: int
-) -> DataFrame | None:
-    """Latest cumulative minima snapshot strictly before
-    ``before_batch`` via store.read_latest_snapshot (directory-listing
-    batch selection, single-partition scan — prune-race-free, ADVICE
-    r10).  Missing store == no prior state; transient FS errors
-    propagate (silently dropping prior minima would overestimate every
-    subsequent distinct count)."""
-    from .store import read_latest_snapshot
-
-    return read_latest_snapshot(spark, path, HASHES_SCHEMA, before_batch)
-
-
-def _process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    key_col: str,
-    k: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe: reads batches <
-    batch_id, overwrite-idempotent write, superseded snapshots pruned —
-    the cmstream contract)."""
-    from .cmstream import _prune_history
-
-    hashes_dir = os.path.join(store_dir, "hashes")
-    prev = _read_prior(batch_df.sparkSession, hashes_dir, batch_id)
-    out = kmv_batch_step(batch_df, prev, key_col, k)
-    out.write.mode("overwrite").parquet(
-        os.path.join(hashes_dir, f"batch={batch_id}")
+def kmv_fold(key_col: str = "key", k: int = kmv.K) -> Fold:
+    """The sketch's store declaration: one ``hashes`` part."""
+    return Fold(
+        {"hashes": HASHES_SCHEMA},
+        lambda batch_df, _bid, prior: {
+            "hashes": kmv_batch_step(batch_df, prior["hashes"], key_col, k)
+        },
     )
-    _prune_history(batch_df.sparkSession, hashes_dir, batch_id)
 
 
 def kmv_stream(
@@ -114,26 +86,17 @@ def kmv_stream(
     key_col: str = "key",
     k: int = kmv.K,
 ):
-    """Attach the sketch to a streaming frame; returns a configured
-    DataStreamWriter (caller adds trigger/checkpoint and starts it).
-    One store per checkpoint lineage."""
+    """Attach the sketch to a streaming frame (store.attach)."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch(batch_df, batch_id, store_dir, key_col, k)
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    return attach(stream, store_dir, *kmv_fold(key_col, k))
 
 
 def current_kmv(spark: SparkSession, store_dir: str) -> DataFrame:
     """The latest cumulative minima set (column ``h``) — feed it to
     kmv.kmv_estimate / kmv_intersect_estimate, or kmv_union to combine
     with other stores."""
-    hashes = _read_prior(spark, os.path.join(store_dir, "hashes"), 2**31 - 1)
-    if hashes is None:
-        return spark.createDataFrame([], "h long")
-    return hashes
+    return read_current(spark, store_dir, "hashes", HASHES_SCHEMA)
 
 
 def replay_kmv(
@@ -143,62 +106,16 @@ def replay_kmv(
     k: int = kmv.K,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the streaming sketch (real
-    micro-batch engine: staged parquet source, foreachBatch sink,
-    availableNow trigger) and return the final minima set — which
+    """Replay a batch frame through the streaming sketch
+    (replay.replay_store) and return the final minima set — which
     equals kmv_build of the whole frame whatever the slicing."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or key_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_kmv_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = kmv_stream(stream, store, key_col, k)
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"KMV replay did not drain within {timeout_sec}s — refusing"
-                " to read a partially-populated store"
-            )
-        final = current_kmv(spark, store)
-        rows = final.collect()  # materialize before the store dir is removed
-        return spark.createDataFrame(rows, "h long")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+    return replay_store(
+        spark, df,
+        lambda stream, store: kmv_stream(stream, store, key_col, k),
+        lambda store: detached(current_kmv(spark, store)),
+        num_batches, order_col or key_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -207,21 +124,15 @@ def replay_kmv(
 # (reference advanced_elb_logs_etl.py:345-363): per-(hour, ...) distinct
 # estimates that stay queryable while the stream runs, roll up across
 # groups via kmv.kmv_merge_grouped, and merge across independent stores.
-# Same monotone cumulative store as the global form — the per-group fold
-# keeps each group's k smallest hashes, so the streamed state equals the
-# batch grouped build whatever the slicing; an empty batch (or a batch
-# missing a group) rewrites that group's prior rows verbatim.
+# A batch missing a group rewrites that group's prior minima verbatim.
 # ---------------------------------------------------------------------------
 
 
-def _grouped_state_schema(spark: SparkSession, groups_ddl: str) -> T.StructType:
+def _grouped_state_schema(groups_ddl: str) -> T.StructType:
     """State schema for the grouped store: the caller's group columns
     (DDL string, e.g. "hour string, segment string") + (h long,
-    batch int).  Built through createDataFrame so the DDL parse follows
-    the session's resolver."""
-    return spark.createDataFrame(
-        [], f"{groups_ddl}, h long, batch int"
-    ).schema
+    batch int)."""
+    return T.DataType.fromDDL(f"{groups_ddl}, h long, batch int")
 
 
 def kmv_grouped_batch_step(
@@ -244,32 +155,19 @@ def kmv_grouped_batch_step(
     )
 
 
-def _process_batch_grouped(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    group_cols: list[str],
-    groups_ddl: str,
-    key_col: str,
-    k: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe: reads batches <
-    batch_id via the single-partition snapshot read, overwrite-
-    idempotent write, superseded snapshots pruned — the cmstream
-    contract, unchanged by grouping)."""
-    from .cmstream import _prune_history
-    from .store import read_latest_snapshot
-
-    spark = batch_df.sparkSession
-    hashes_dir = os.path.join(store_dir, "hashes")
-    prev = read_latest_snapshot(
-        spark, hashes_dir, _grouped_state_schema(spark, groups_ddl), batch_id
+def kmv_fold_grouped(
+    group_cols: list[str], groups_ddl: str, key_col: str = "key", k: int = kmv.K
+) -> Fold:
+    """The grouped sketch's store declaration: one ``hashes`` part whose
+    schema leads with the group columns (``groups_ddl``)."""
+    return Fold(
+        {"hashes": _grouped_state_schema(groups_ddl)},
+        lambda batch_df, _bid, prior: {
+            "hashes": kmv_grouped_batch_step(
+                batch_df, prior["hashes"], group_cols, key_col, k
+            )
+        },
     )
-    out = kmv_grouped_batch_step(batch_df, prev, group_cols, key_col, k)
-    out.write.mode("overwrite").parquet(
-        os.path.join(hashes_dir, f"batch={batch_id}")
-    )
-    _prune_history(spark, hashes_dir, batch_id)
 
 
 def kmv_stream_grouped(
@@ -280,11 +178,9 @@ def kmv_stream_grouped(
     key_col: str = "key",
     k: int = kmv.K,
 ):
-    """Attach the per-group sketch to a streaming frame; returns a
-    configured DataStreamWriter (caller adds trigger/checkpoint and
-    starts it).  ``groups_ddl`` declares the group columns' types for
-    the store reads (e.g. "hour string").  One store per checkpoint
-    lineage.
+    """Attach the per-group sketch to a streaming frame (store.attach).
+    ``groups_ddl`` declares the group columns' types for the store reads
+    (e.g. "hour string").
 
     Scale shape: per micro-batch one grouped distinct agg + one
     row_number window keyed on the group, a union with the <= k-rows-
@@ -295,13 +191,9 @@ def kmv_stream_grouped(
         raise ValueError(f"k must be >= 2, got {k}")
     if not group_cols:
         raise ValueError("group_cols must be non-empty; use kmv_stream")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch_grouped(
-            batch_df, batch_id, store_dir, group_cols, groups_ddl, key_col, k
-        )
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    return attach(
+        stream, store_dir, *kmv_fold_grouped(group_cols, groups_ddl, key_col, k)
+    )
 
 
 def current_kmv_grouped(
@@ -311,17 +203,9 @@ def current_kmv_grouped(
     it to kmv.kmv_estimate_grouped for per-group distinct estimates,
     kmv.kmv_merge_grouped to roll up, or union with another store's
     frame and re-minimize (kmv_merge_grouped again) to merge stores."""
-    from .store import read_latest_snapshot
-
-    hashes = read_latest_snapshot(
-        spark,
-        os.path.join(store_dir, "hashes"),
-        _grouped_state_schema(spark, groups_ddl),
-        2**31 - 1,
+    return read_current(
+        spark, store_dir, "hashes", _grouped_state_schema(groups_ddl)
     )
-    if hashes is None:
-        return spark.createDataFrame([], f"{groups_ddl}, h long")
-    return hashes
 
 
 def replay_kmv_grouped(
@@ -333,61 +217,15 @@ def replay_kmv_grouped(
     k: int = kmv.K,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the grouped streaming sketch (real
-    micro-batch engine: staged parquet source, foreachBatch sink,
-    availableNow trigger) and return the final per-group minima — which
-    equal kmv_build_grouped of the whole frame whatever the slicing."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or key_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_gkmv_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = kmv_stream_grouped(
+    """Replay a batch frame through the grouped streaming sketch and
+    return the final per-group minima — which equal kmv_build_grouped of
+    the whole frame whatever the slicing."""
+    return replay_store(
+        spark, df,
+        lambda stream, store: kmv_stream_grouped(
             stream, store, group_cols, groups_ddl, key_col, k
-        )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"grouped KMV replay did not drain within {timeout_sec}s — "
-                "refusing to read a partially-populated store"
-            )
-        final = current_kmv_grouped(spark, store, groups_ddl)
-        rows = final.collect()  # materialize before the store dir is removed
-        return spark.createDataFrame(rows, f"{groups_ddl}, h long")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+        ),
+        lambda store: detached(current_kmv_grouped(spark, store, groups_ddl)),
+        num_batches, order_col or key_col,
+    )

@@ -59,6 +59,8 @@ from ..functions.hashing import (
     shingles,
 )
 from ..operators.dedup import NUM_BANDS, NUM_HASHES, ROWS_PER_BAND
+from .replay import replay_store
+from .store import delete_batches, list_batches
 
 __all__ = [
     "band_key_rows",
@@ -350,7 +352,7 @@ def _first_seen_process_batch(
     except AnalysisException:
         # missing store == first batch only; a transient FS error here
         # must propagate — treating it as "nothing seen" would pass
-        # duplicates as first-seen (ADVICE r9 — the cmstream contract)
+        # duplicates as first-seen (ADVICE r9 — the store.py contract)
         seen = None
     # own the shingle-hash cache for the whole batch: blocking probe,
     # LSH pairs, verification, kept docs, and new keys all read ONE
@@ -379,94 +381,35 @@ def replay_first_seen_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    timeout_sec: int = 300,
     with_batch_col: bool = False,
     prune_keep_last: int | None = None,
     prune_every: int = 8,
 ) -> DataFrame:
     """Replay a batch docs frame through the streaming first-seen policy
-    (real micro-batch engine: staged parquet source, foreachBatch sink,
-    availableNow trigger) and return the kept rows
+    (replay.replay_store) and return the kept rows
     (``with_batch_col=True`` appends the micro-batch id each row was kept
     in, recovered from the store's ``batch=N`` partitioning).
 
     ``num_batches=1`` stages one source file group processed as ONE
     micro-batch — the configuration whose result is value-identical to
     batch dedup_corpus (the catalog/driver gate).  ``num_batches>1``
-    splits the input into that many single-file micro-batches
-    (maxFilesPerTrigger=1) in ``id_col`` order, exercising the
-    cross-batch key-store path with a deterministic arrival order.
-
-    Harness tuning (same rationale as replay_stream): shuffle partitions
-    are temporarily lowered to 16 for the replay — the per-batch CC loop
-    runs several small shuffles whose task overhead dominates at fixture
-    scale — and restored in a finally."""
-    import shutil
-    import tempfile
-    import uuid
-
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_firstseen_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            docs.coalesce(8).write.parquet(src)
-        else:
-            # one file per micro-batch, ordered by id: file N holds the
-            # N-th id-range slice so arrival order is reproducible
-            docs.repartitionByRange(num_batches, F.col(id_col)).sortWithinPartitions(
-                id_col
-            ).write.parquet(src)
-            # pin arrival order: the file source orders same-trigger
-            # candidates by modification time, and one write job stamps
-            # near-identical mtimes — restamp part files in name order
-            # (part-N holds the N-th id range) with strictly increasing
-            # times so batch N is exactly id-slice N
-            import time as _time
-
-            base = _time.time() - 3600
-            parts = sorted(
-                f for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(docs.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = first_seen_dedup_stream(
+    splits the input into that many single-file micro-batches in
+    ``id_col`` order, exercising the cross-batch key-store path with a
+    deterministic arrival order."""
+    cols = list(docs.columns) + (["batch"] if with_batch_col else [])
+    return replay_store(
+        spark, docs,
+        lambda stream, store: first_seen_dedup_stream(
             stream, store, id_col, text_col, threshold,
             prune_keep_last=prune_keep_last, prune_every=prune_every,
-        )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .queryName(f"first_seen_{uuid.uuid4().hex[:8]}")
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:  # pragma: no cover - defensive timeout path
-            q.stop()
-            raise TimeoutError("first-seen replay did not drain")
-        if q.exception() is not None:
-            raise q.exception()
-        cols = list(docs.columns) + (["batch"] if with_batch_col else [])
-        kept = (
-            spark.read.schema(docs.schema)
-            .option("recursiveFileLookup", "false")
-            .parquet(os.path.join(store, "kept"))
-            .select(*cols)
-        )
-        return kept.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+        ),
+        lambda store: spark.read.schema(docs.schema)
+        .option("recursiveFileLookup", "false")
+        .parquet(os.path.join(store, "kept"))
+        .select(*cols)
+        .localCheckpoint(eager=True),
+        num_batches, id_col,
+    )
 
 
 def prune_key_store(spark: SparkSession, store_dir: str, keep_last_batches: int) -> int:
@@ -485,19 +428,7 @@ def prune_key_store(spark: SparkSession, store_dir: str, keep_last_batches: int)
     as the compaction manifest — works on object stores); batch ids
     order the partitions, so "newest" needs no timestamps."""
     keys_dir = os.path.join(store_dir, "keys")
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    kpath = jvm.org.apache.hadoop.fs.Path(keys_dir)
-    fs = kpath.getFileSystem(jsc.hadoopConfiguration())
-    if not fs.exists(kpath):
-        return 0
-    batches = []
-    for status in fs.listStatus(kpath):
-        name = status.getPath().getName()
-        if name.startswith("batch="):
-            batches.append((int(name.split("=", 1)[1]), status.getPath()))
-    batches.sort()
+    batches = sorted(list_batches(spark, keys_dir) or [])
     to_drop = batches[: max(0, len(batches) - keep_last_batches)]
-    for _, path in to_drop:
-        fs.delete(path, True)
+    delete_batches(spark, keys_dir, to_drop)
     return len(to_drop)

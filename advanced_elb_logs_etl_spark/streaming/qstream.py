@@ -1,6 +1,6 @@
 """Streaming quantile sketch: the batch bottom-k sample
 (operators/qsketch.py) maintained across micro-batches with the
-bounded, restart-safe parquet store of streaming/cmstream.py — live
+bounded, restart-safe snapshot store of streaming/store.py — live
 percentiles/CDFs of an unbounded stream (the streaming form of the
 reference's per-hour median, reference write_hourly_aggregation,
 :345-363) from k rows of state.
@@ -15,12 +15,11 @@ at any geometry.  Contrast a true reservoir (Vitter 1985): the coin is
 the deterministic row hash, so no per-batch randomness, no replay
 drift, and independent stores merge exactly (qsketch.q_merge).
 
-Store layout under ``store_dir``: ``sample/batch=N`` holds the
-CUMULATIVE (h, v) sample as of batch N; reads select the latest
-snapshot from the directory listing (prune-race-free, ADVICE r10),
-writes are overwrite-idempotent, and superseded snapshots are pruned.
-No empty-batch sentinel: the state is the full sample, so an empty
-batch rewrites the prior state verbatim.
+Store: one ``sample`` part in the cumulative-snapshot store
+(streaming/store.py holds the contract).  No empty-batch sentinel: the
+state is the full sample, so an empty batch rewrites the prior state
+verbatim.  The ``v`` column keeps the STREAM's value type (see
+_sample_schema).
 
 Scale shape (100 TB/day stream): per micro-batch one projection +
 TakeOrdered(k) over the batch, a 2k-row re-minimize, one k-row write.
@@ -31,45 +30,36 @@ k rows PER GROUP (caller bounds group cardinality: hours, tenants).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import qsketch
+from .replay import detached, replay_store
+from .store import Fold, attach, read_current
 
 __all__ = [
     "q_batch_step",
+    "q_fold",
     "q_stream",
     "current_qsketch",
     "replay_qsketch",
     "q_grouped_batch_step",
+    "q_fold_grouped",
     "q_stream_grouped",
     "current_qsketch_grouped",
     "replay_qsketch_grouped",
 ]
 
-def _sample_schema(value_type: T.DataType) -> T.StructType:
-    """Store schema for the global sample: (h, v, batch) with ``v``
-    carrying the STREAM's value type — q_batch_step preserves the input
-    column type (the 'copied input values, bit-exact' contract
-    inherited from qsketch), so the snapshot reader must declare the
-    same type or a BIGINT value stream would write long parquet and
-    read it back as double (ADVICE r11)."""
-    return T.StructType(
-        [
-            T.StructField("h", T.LongType()),
-            T.StructField("v", value_type),
-            T.StructField("batch", T.IntegerType()),
-        ]
-    )
 
-
-#: The default (double-valued) store schema, kept for callers that
-#: pre-create stores; every internal read derives the schema from the
-#: actual value type instead.
-SAMPLE_SCHEMA = _sample_schema(T.DoubleType())
+def _sample_schema(value_ddl: str, groups_ddl: str | None = None) -> T.StructType:
+    """Store schema: the group columns (``groups_ddl``, grouped form
+    only) + (h long, v <value_ddl>, batch int).  ``v`` carries the
+    STREAM's value type — the batch step copies input values bit-exact
+    (the qsketch contract), so the snapshot reader must declare the same
+    type or a BIGINT value stream would write long parquet and read it
+    back as double (ADVICE r11)."""
+    lead = f"{groups_ddl}, " if groups_ddl else ""
+    return T.DataType.fromDDL(f"{lead}h long, v {value_ddl}, batch int")
 
 
 def q_batch_step(
@@ -89,48 +79,20 @@ def q_batch_step(
     return qsketch.q_merge(batch_sk, prev_sample.select("h", "v"), k=k)
 
 
-def _read_prior(
-    spark: SparkSession,
-    path: str,
-    before_batch: int,
-    value_type: T.DataType | None = None,
-) -> DataFrame | None:
-    """Latest cumulative sample snapshot strictly before ``before_batch``
-    via store.read_latest_snapshot (directory-listing batch selection,
-    single-partition scan).  Missing store == no prior state; transient
-    FS errors propagate (silently dropping prior sample rows would bias
-    every subsequent quantile toward the recent batches)."""
-    from .store import read_latest_snapshot
-
-    schema = _sample_schema(value_type or T.DoubleType())
-    return read_latest_snapshot(spark, path, schema, before_batch)
-
-
-def _process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    value_col: str,
-    id_col: str,
-    k: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe: latest-snapshot read
-    strictly before batch_id, overwrite-idempotent write, superseded
-    snapshots pruned — the cmstream contract)."""
-    from .cmstream import _prune_history
-
-    sample_dir = os.path.join(store_dir, "sample")
-    prev = _read_prior(
-        batch_df.sparkSession,
-        sample_dir,
-        batch_id,
-        batch_df.schema[value_col].dataType,
+def q_fold(
+    value_col: str = "v",
+    id_col: str = "id",
+    k: int = qsketch.K,
+    value_ddl: str = "double",
+) -> Fold:
+    """The sketch's store declaration: one ``sample`` part whose ``v``
+    has the stream's value type ``value_ddl``."""
+    return Fold(
+        {"sample": _sample_schema(value_ddl)},
+        lambda batch_df, _bid, prior: {
+            "sample": q_batch_step(batch_df, prior["sample"], value_col, id_col, k)
+        },
     )
-    out = q_batch_step(batch_df, prev, value_col, id_col, k)
-    out.write.mode("overwrite").parquet(
-        os.path.join(sample_dir, f"batch={batch_id}")
-    )
-    _prune_history(batch_df.sparkSession, sample_dir, batch_id)
 
 
 def q_stream(
@@ -140,16 +102,11 @@ def q_stream(
     id_col: str = "id",
     k: int = qsketch.K,
 ):
-    """Attach the sketch to a streaming frame; returns a configured
-    DataStreamWriter (caller adds trigger/checkpoint and starts it).
-    One store per checkpoint lineage."""
+    """Attach the sketch to a streaming frame (store.attach)."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch(batch_df, batch_id, store_dir, value_col, id_col, k)
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    vddl = stream.schema[value_col].dataType.simpleString()
+    return attach(stream, store_dir, *q_fold(value_col, id_col, k, vddl))
 
 
 def current_qsketch(
@@ -157,16 +114,10 @@ def current_qsketch(
 ) -> DataFrame:
     """The latest cumulative sample (columns ``h, v``) — feed it to
     qsketch.q_quantiles / q_cdf_micro, or q_merge to combine with other
-    stores.  ``value_ddl`` declares the stream's value type (the store
-    copies input values verbatim — a BIGINT stream needs "bigint"
-    here, mirroring groups_ddl on the grouped form)."""
-    vtype = spark.createDataFrame([], f"v {value_ddl}").schema["v"].dataType
-    sample = _read_prior(
-        spark, os.path.join(store_dir, "sample"), 2**31 - 1, vtype
-    )
-    if sample is None:
-        return spark.createDataFrame([], f"h long, v {value_ddl}")
-    return sample.select("h", "v")
+    stores.  ``value_ddl`` declares the stream's value type (a BIGINT
+    stream needs "bigint" here, mirroring groups_ddl on the grouped
+    form)."""
+    return read_current(spark, store_dir, "sample", _sample_schema(value_ddl))
 
 
 def replay_qsketch(
@@ -177,90 +128,26 @@ def replay_qsketch(
     k: int = qsketch.K,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
-    """Replay a batch frame through the streaming sketch (real
-    micro-batch engine: staged parquet source, foreachBatch sink,
-    availableNow trigger) and return the final sample — which equals
+    """Replay a batch frame through the streaming sketch
+    (replay.replay_store) and return the final sample — which equals
     q_build of the whole frame whatever the slicing."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or id_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_qsk_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = q_stream(stream, store, value_col, id_col, k)
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"qsketch replay did not drain within {timeout_sec}s —"
-                " refusing to read a partially-populated store"
-            )
-        vddl = df.schema[value_col].dataType.simpleString()
-        final = current_qsketch(spark, store, value_ddl=vddl)
-        rows = final.collect()  # materialize before the store dir is removed
-        return spark.createDataFrame(rows, f"h long, v {vddl}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+    vddl = df.schema[value_col].dataType.simpleString()
+    return replay_store(
+        spark, df,
+        lambda stream, store: q_stream(stream, store, value_col, id_col, k),
+        lambda store: detached(current_qsketch(spark, store, vddl)),
+        num_batches, order_col or id_col,
+    )
 
 
 # ---------------------------------------------------------------------------
 # Grouped streaming quantile sketch: per-group samples maintained on the
 # stream — live per-(hour, status, tenant) percentiles that stay
 # queryable while the stream runs, roll up across groups via
-# qsketch.q_merge_grouped, and merge across independent stores.  Same
-# monotone cumulative store as the global form — the per-group fold
-# keeps each group's k smallest (h, v) rows, so the streamed state
-# equals the batch grouped build whatever the slicing; an empty batch
-# (or a batch missing a group) rewrites that group's prior rows
-# verbatim.
+# qsketch.q_merge_grouped, and merge across independent stores.  A
+# batch missing a group rewrites that group's prior sample verbatim.
 # ---------------------------------------------------------------------------
-
-
-def _grouped_state_schema(
-    spark: SparkSession, groups_ddl: str, value_ddl: str = "double"
-) -> T.StructType:
-    """State schema for the grouped store: the caller's group columns
-    (DDL string, e.g. "hour string, status string") + (h long,
-    v <value_ddl>, batch int).  The value type follows the stream
-    (values are copied verbatim into the store — ADVICE r11).  Built
-    through createDataFrame so the DDL parse follows the session's
-    resolver."""
-    return spark.createDataFrame(
-        [], f"{groups_ddl}, h long, v {value_ddl}, batch int"
-    ).schema
 
 
 def q_grouped_batch_step(
@@ -286,40 +173,24 @@ def q_grouped_batch_step(
     )
 
 
-def _process_batch_grouped(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
+def q_fold_grouped(
     group_cols: list[str],
     groups_ddl: str,
-    value_col: str,
-    id_col: str,
-    k: int,
-) -> None:
-    """foreachBatch body (module-level, retry-safe — the cmstream
-    contract, unchanged by grouping)."""
-    from .cmstream import _prune_history
-    from .store import read_latest_snapshot
-
-    spark = batch_df.sparkSession
-    sample_dir = os.path.join(store_dir, "sample")
-    prev = read_latest_snapshot(
-        spark,
-        sample_dir,
-        _grouped_state_schema(
-            spark,
-            groups_ddl,
-            batch_df.schema[value_col].dataType.simpleString(),
-        ),
-        batch_id,
+    value_col: str = "v",
+    id_col: str = "id",
+    k: int = qsketch.K,
+    value_ddl: str = "double",
+) -> Fold:
+    """The grouped sketch's store declaration: one ``sample`` part whose
+    schema leads with the group columns (``groups_ddl``)."""
+    return Fold(
+        {"sample": _sample_schema(value_ddl, groups_ddl)},
+        lambda batch_df, _bid, prior: {
+            "sample": q_grouped_batch_step(
+                batch_df, prior["sample"], group_cols, value_col, id_col, k
+            )
+        },
     )
-    out = q_grouped_batch_step(
-        batch_df, prev, group_cols, value_col, id_col, k
-    )
-    out.write.mode("overwrite").parquet(
-        os.path.join(sample_dir, f"batch={batch_id}")
-    )
-    _prune_history(spark, sample_dir, batch_id)
 
 
 def q_stream_grouped(
@@ -331,11 +202,9 @@ def q_stream_grouped(
     id_col: str = "id",
     k: int = qsketch.K,
 ):
-    """Attach the per-group sketch to a streaming frame; returns a
-    configured DataStreamWriter (caller adds trigger/checkpoint and
-    starts it).  ``groups_ddl`` declares the group columns' types for
-    the store reads (e.g. "hour string").  One store per checkpoint
-    lineage.
+    """Attach the per-group sketch to a streaming frame (store.attach).
+    ``groups_ddl`` declares the group columns' types for the store reads
+    (e.g. "hour string").
 
     Scale shape: per micro-batch one row_number window keyed on the
     group, a union with the <= k-rows-per-group prior, and one bounded
@@ -344,20 +213,12 @@ def q_stream_grouped(
         raise ValueError(f"k must be >= 2, got {k}")
     if not group_cols:
         raise ValueError("group_cols must be non-empty; use q_stream")
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _process_batch_grouped(
-            batch_df,
-            batch_id,
-            store_dir,
-            group_cols,
-            groups_ddl,
-            value_col,
-            id_col,
-            k,
-        )
-
-    return stream.writeStream.foreachBatch(_process).outputMode("update")
+    vddl = stream.schema[value_col].dataType.simpleString()
+    return attach(
+        stream,
+        store_dir,
+        *q_fold_grouped(group_cols, groups_ddl, value_col, id_col, k, vddl),
+    )
 
 
 def current_qsketch_grouped(
@@ -371,19 +232,9 @@ def current_qsketch_grouped(
     roll-ups, or union with other stores before a re-minimize.
     ``value_ddl`` declares the stream's value type (values are stored
     verbatim)."""
-    from .store import read_latest_snapshot
-
-    sample = read_latest_snapshot(
-        spark,
-        os.path.join(store_dir, "sample"),
-        _grouped_state_schema(spark, groups_ddl, value_ddl),
-        2**31 - 1,
+    return read_current(
+        spark, store_dir, "sample", _sample_schema(value_ddl, groups_ddl)
     )
-    if sample is None:
-        return spark.createDataFrame(
-            [], f"{groups_ddl}, h long, v {value_ddl}"
-        )
-    return sample.drop("batch")
 
 
 def replay_qsketch_grouped(
@@ -396,63 +247,18 @@ def replay_qsketch_grouped(
     k: int = qsketch.K,
     num_batches: int = 1,
     order_col: str | None = None,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Replay a batch frame through the grouped streaming sketch and
     return the final per-group sample — which equals q_build_grouped of
     the whole frame whatever the slicing."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    order_col = order_col or id_col
-    tmp = tempfile.mkdtemp(prefix="sparkgraft_qskg_")
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        src = os.path.join(tmp, "src")
-        ckpt = os.path.join(tmp, "ckpt")
-        store = os.path.join(tmp, "store")
-        if num_batches <= 1:
-            df.coalesce(8).write.parquet(src)
-        else:
-            df.repartitionByRange(
-                num_batches, F.col(order_col)
-            ).sortWithinPartitions(order_col).write.parquet(src)
-            base = _time.time() - 3600
-            parts = sorted(
-                f
-                for f in os.listdir(src)
-                if f.startswith("part-") and not f.endswith(".crc")
-            )
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(src, fname), (base + i, base + i))
-        reader = spark.readStream.schema(df.schema)
-        if num_batches > 1:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        stream = reader.parquet(src)
-        writer = q_stream_grouped(
+    vddl = df.schema[value_col].dataType.simpleString()
+    return replay_store(
+        spark, df,
+        lambda stream, store: q_stream_grouped(
             stream, store, group_cols, groups_ddl, value_col, id_col, k
-        )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"grouped qsketch replay did not drain within {timeout_sec}s"
-                " — refusing to read a partially-populated store"
-            )
-        vddl = df.schema[value_col].dataType.simpleString()
-        final = current_qsketch_grouped(spark, store, groups_ddl, vddl)
-        rows = final.collect()  # materialize before the store dir is removed
-        return spark.createDataFrame(
-            rows, f"{groups_ddl}, h long, v {vddl}"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        shutil.rmtree(tmp, ignore_errors=True)
+        ),
+        lambda store: detached(
+            current_qsketch_grouped(spark, store, groups_ddl, vddl)
+        ),
+        num_batches, order_col or id_col,
+    )

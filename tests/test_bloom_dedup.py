@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.operators import bloom
 from advanced_elb_logs_etl_spark.streaming import bloomstream as bst
+from advanced_elb_logs_etl_spark.streaming.store import fold_batch
 
 K, M = 3, 64  # tiny geometry so false positives are common in tests
 
@@ -173,8 +174,8 @@ def test_process_batch_retry_idempotent(spark, tmp_path):
     rows1 = [(i, f"k{i % 7}") for i in range(40)]
     rows2 = [(i, f"k{i % 7}") for i in range(40, 80)]
     store = str(tmp_path / "store")
-    bst._process_batch(_df(spark, rows1), 0, store, "key", "o", K, M)
-    bst._process_batch(_df(spark, rows2), 1, store, "key", "o", K, M)
+    fold_batch(_df(spark, rows1), 0, store, *bst.bloom_fold("key", "o", K, M))
+    fold_batch(_df(spark, rows2), 1, store, *bst.bloom_fold("key", "o", K, M))
     before_bits = sorted(
         (r.bit, r.t_first)
         for r in bst.current_bloom_state(spark, store).collect()
@@ -183,7 +184,7 @@ def test_process_batch_retry_idempotent(spark, tmp_path):
         tuple(r) for r in bst.current_bloom_summary(spark, store).collect()
     )
     # retry batch 1: same outputs
-    bst._process_batch(_df(spark, rows2), 1, store, "key", "o", K, M)
+    fold_batch(_df(spark, rows2), 1, store, *bst.bloom_fold("key", "o", K, M))
     assert (
         sorted(
             (r.bit, r.t_first)

@@ -64,6 +64,20 @@ def test_corrupt_gz_skipped_not_fatal(spark, tmp_path):
     assert n == len(corpus())  # every line of the good file, none of the bad
 
 
+@pytest.mark.parametrize("n_files", [2, 8])
+def test_read_alb_lines_explicit_file_list(spark, tmp_path, n_files):
+    """An explicit multi-file list reads every file (the run_pipeline
+    path when ELB_INPUT_PATHS names several inputs)."""
+    lines = corpus()
+    paths = [
+        write_gz(str(tmp_path / f"alb{i}.gz"), lines[: i + 1])
+        for i in range(n_files)
+    ]
+    df = read_alb_lines(spark, paths)
+    assert df.count() == sum(i + 1 for i in range(n_files))
+    assert df.select("log_source_file").distinct().count() == n_files
+
+
 def test_pipeline_checkpoint_materialization(spark, tmp_path):
     """materialize='checkpoint_dir:<path>' writes the intermediate frame to
     parquet and re-reads it for the sink fan-out (the 100 TB variant)."""

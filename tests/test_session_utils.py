@@ -118,11 +118,15 @@ def test_autosize_never_lowers_deliberate_session_value(
         assert autosize_for_inputs(spark, [str(f)]) is None
         assert spark.conf.get("spark.sql.shuffle.partitions") == "4096"
         # deliberate low setting + bigger estimate: raising is still the
-        # whole point of the sizing (the 200x window-sort spill fix)
+        # whole point of the sizing (the 200x window-sort spill fix).
+        # The estimate is sized to 2 * max(cores, 4) partitions of
+        # 128 MiB over the 100-byte file, so it beats both the low
+        # setting and the cores clamp on any core count.
         spark.conf.set("spark.sql.shuffle.partitions", "4")
-        monkeypatch.setenv("ELB_DECODE_FACTOR", str(256 * 1024 * 10))
+        want = 2 * max(cores, 4)
+        monkeypatch.setenv("ELB_DECODE_FACTOR", str(want * 128 * 1024 * 1024 // 100))
         applied = autosize_for_inputs(spark, [str(f)])
-        assert applied is not None and applied > 4
+        assert applied == want
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(applied)
         # the untouched stock default may be lowered by the estimate
         spark.conf.set("spark.sql.shuffle.partitions", "200")

@@ -401,3 +401,31 @@ def test_replay_parquet_sink_empty_emission(spark):
         )
         assert got.count() == 0
         assert got.columns == ["id", "v"]
+
+
+def test_stage_cache_misses_for_another_application(spark):
+    """The shared staged-source cache is keyed on the application id: a
+    copy staged by another application (a restarted context) is never
+    reused, and clear_stage_cache removes every staged copy."""
+    import os
+    import tempfile
+
+    from advanced_elb_logs_etl_spark.streaming import replay
+
+    key = ("stage_cache_app_test",)
+    foreign = tempfile.mkdtemp(prefix="sparkgraft_stage_")
+    stale = os.path.join(foreign, "src")
+    spark.createDataFrame([(9, "z")], "id bigint, v string").write.parquet(stale)
+    replay._STAGE_CACHE[("another-application",) + key] = stale
+    docs = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string")
+    try:
+        got = replay.replay_stream(
+            spark, docs, lambda s: s.select("id", "v"), "stage_cache",
+            output_mode="append", staging_key=key,
+        )
+        assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (2, "b")]
+        own = replay._STAGE_CACHE[(spark.sparkContext.applicationId,) + key]
+        assert own != stale and os.path.isdir(own)
+    finally:
+        replay.clear_stage_cache()
+    assert not os.path.exists(foreign) and not os.path.exists(own)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.operators import cmsketch as cm
 from advanced_elb_logs_etl_spark.streaming import cmstream as cms
+from advanced_elb_logs_etl_spark.streaming.store import fold_batch
 
 W, D = 64, 4
 
@@ -39,13 +40,13 @@ def test_batch_fold_equals_single_build(spark):
 
 def test_process_batch_retry_idempotent(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_cms_") as store:
-        cms._process_batch(_rows(spark, BATCHES[0]), 0, store, "key", W, D)
-        cms._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", W, D)
+        fold_batch(_rows(spark, BATCHES[0]), 0, store, *cms.cm_fold("key", W, D))
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *cms.cm_fold("key", W, D))
         first = sorted(
             map(tuple, cms.current_sketch(spark, store).collect())
         )
         # a retried batch must read only batch-0 state and overwrite
-        cms._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", W, D)
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *cms.cm_fold("key", W, D))
         assert (
             sorted(map(tuple, cms.current_sketch(spark, store).collect()))
             == first
@@ -124,7 +125,7 @@ def test_store_prunes_superseded_snapshots(spark):
 
     with tempfile.TemporaryDirectory(prefix="sparkgraft_cms_") as store:
         for i, keys in enumerate(BATCHES):
-            cms._process_batch(_rows(spark, keys), i, store, "key", W, D)
+            fold_batch(_rows(spark, keys), i, store, *cms.cm_fold("key", W, D))
         cells_dir = os.path.join(store, "cells")
         kept = sorted(
             d for d in os.listdir(cells_dir) if d.startswith("batch=")
@@ -136,7 +137,7 @@ def test_store_prunes_superseded_snapshots(spark):
             map(tuple, cms.current_sketch(spark, store).collect())
         ) == sorted(map(tuple, whole.collect()))
         # a retry of the LAST batch still sees its predecessor
-        cms._process_batch(_rows(spark, BATCHES[2]), 2, store, "key", W, D)
+        fold_batch(_rows(spark, BATCHES[2]), 2, store, *cms.cm_fold("key", W, D))
         assert sorted(
             map(tuple, cms.current_sketch(spark, store).collect())
         ) == sorted(map(tuple, whole.collect()))
@@ -182,16 +183,11 @@ def test_grouped_process_batch_retry_and_missing_group(spark):
     monotone per group — the no-sentinel argument)."""
     import tempfile
 
+    fold = cms.cm_fold_grouped(["hour"], "hour string", "key", W, D)
     with tempfile.TemporaryDirectory(prefix="sparkgraft_gcm_") as store:
-        cms._process_batch_grouped(
-            _grows(spark, G_BATCHES[0]), 0, store, ["hour"],
-            "hour string", "key", W, D,
-        )
+        fold_batch(_grows(spark, G_BATCHES[0]), 0, store, *fold)
         # batch 1 has NO h2 rows: h2 cells must survive unchanged
-        cms._process_batch_grouped(
-            _grows(spark, G_BATCHES[1]), 1, store, ["hour"],
-            "hour string", "key", W, D,
-        )
+        fold_batch(_grows(spark, G_BATCHES[1]), 1, store, *fold)
         first = _cells_by_group(
             cms.current_sketch_grouped(spark, store, "hour string").collect()
         )
@@ -202,10 +198,7 @@ def test_grouped_process_batch_retry_and_missing_group(spark):
             ).collect()
         )
         assert first == want01
-        cms._process_batch_grouped(  # retry of batch 1
-            _grows(spark, G_BATCHES[1]), 1, store, ["hour"],
-            "hour string", "key", W, D,
-        )
+        fold_batch(_grows(spark, G_BATCHES[1]), 1, store, *fold)  # retry
         assert (
             _cells_by_group(
                 cms.current_sketch_grouped(

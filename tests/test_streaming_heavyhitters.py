@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.streaming import heavyhitters as hh
+from advanced_elb_logs_etl_spark.streaming.store import fold_batch
 
 
 def _rows(spark, keys):
@@ -89,15 +90,15 @@ def test_mg_bound_holds_at_small_capacity(spark):
 
 def test_process_batch_retry_idempotent(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hh_") as store:
-        hh._process_batch(_rows(spark, BATCHES[0]), 0, store, "key", 3)
-        hh._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", 3)
+        fold_batch(_rows(spark, BATCHES[0]), 0, store, *hh.mg_fold("key", 3))
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *hh.mg_fold("key", 3))
         after_first = sorted(
             (r.key, r.cnt_lower, r.cnt_upper)
             for r in hh.current_heavy_hitters(spark, store).collect()
         )
         # retry of batch 1 (same id, possibly different task order) must
         # not double-merge: it reads only batch 0 state and overwrites
-        hh._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", 3)
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *hh.mg_fold("key", 3))
         after_retry = sorted(
             (r.key, r.cnt_lower, r.cnt_upper)
             for r in hh.current_heavy_hitters(spark, store).collect()
@@ -142,8 +143,8 @@ def test_empty_summary_batch_stays_visible(spark):
     (ADVICE r8). capacity=2 with 'ccddee' after 'aab' merges to
     a2,b1,c2,d2,e2 -> d = 3rd-largest = 2 -> zero survivors."""
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hh_") as store:
-        hh._process_batch(_rows(spark, list("aab")), 0, store, "key", 2)
-        hh._process_batch(_rows(spark, list("ccddee")), 1, store, "key", 2)
+        fold_batch(_rows(spark, list("aab")), 0, store, *hh.mg_fold("key", 2))
+        fold_batch(_rows(spark, list("ccddee")), 1, store, *hh.mg_fold("key", 2))
         got = hh.current_heavy_hitters(spark, store).collect()
         # cut at batch 1: empty summary (absent-key bound d_total=2 is
         # the store's whole statement).  A row-presence fallback to
@@ -158,7 +159,7 @@ def test_state_chain_survives_empty_summary_batch(spark):
     batches = [list("aab"), list("ccddee"), ["f"]]
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hh_") as store:
         for i, keys in enumerate(batches):
-            hh._process_batch(_rows(spark, keys), i, store, "key", 2)
+            fold_batch(_rows(spark, keys), i, store, *hh.mg_fold("key", 2))
         got = sorted(
             (r.key, r.cnt_lower, r.cnt_upper)
             for r in hh.current_heavy_hitters(spark, store).collect()
@@ -179,14 +180,14 @@ def test_consistent_cut_on_crash_between_writes(spark):
     import shutil
 
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hh_") as store:
-        hh._process_batch(_rows(spark, BATCHES[0]), 0, store, "key", 3)
+        fold_batch(_rows(spark, BATCHES[0]), 0, store, *hh.mg_fold("key", 3))
         at_batch0 = sorted(
             (r.key, r.cnt_lower, r.cnt_upper)
             for r in hh.current_heavy_hitters(spark, store).collect()
         )
         # simulate batch 1 crashing AFTER the meta write, BEFORE the
         # summary write: run the full step, then delete summary/batch=1
-        hh._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", 3)
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *hh.mg_fold("key", 3))
         shutil.rmtree(os.path.join(store, "summary", "batch=1"))
         crashed = sorted(
             (r.key, r.cnt_lower, r.cnt_upper)
@@ -194,14 +195,14 @@ def test_consistent_cut_on_crash_between_writes(spark):
         )
         assert crashed == at_batch0
         # the retry completes batch 1 and the cut advances
-        hh._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", 3)
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *hh.mg_fold("key", 3))
         final = hh.current_heavy_hitters(spark, store).collect()
         assert len(final) > 0
 
 
 def test_store_fold_matches_python_on_random_batches(spark):
     """Differential of the STORE semantics (not just the pure step):
-    fold random batch sequences through _process_batch with a real
+    fold random batch sequences through store.fold_batch with a real
     parquet store — including sequences whose compactions legitimately
     EMPTY the summary (the r9 sentinel fix) — and compare the reader's
     final state to the pure-Python MG fold.  Deterministic seeds instead
@@ -222,7 +223,7 @@ def test_store_fold_matches_python_on_random_batches(spark):
             batches[1] = list("abcdef")
         with tempfile.TemporaryDirectory(prefix="sparkgraft_hh_") as store:
             for i, keys in enumerate(batches):
-                hh._process_batch(_rows(spark, keys), i, store, "key", capacity)
+                fold_batch(_rows(spark, keys), i, store, *hh.mg_fold("key", capacity))
             got = {
                 r.key: (r.cnt_lower, r.cnt_upper)
                 for r in hh.current_heavy_hitters(spark, store).collect()
@@ -240,7 +241,7 @@ def test_store_prunes_superseded_snapshots(spark):
 
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hh_") as store:
         for i, keys in enumerate(BATCHES[:3]):
-            hh._process_batch(_rows(spark, keys), i, store, "key", 3)
+            fold_batch(_rows(spark, keys), i, store, *hh.mg_fold("key", 3))
         for sub in ("summary", "meta"):
             kept = sorted(
                 d
@@ -251,7 +252,7 @@ def test_store_prunes_superseded_snapshots(spark):
         before = sorted(
             map(tuple, hh.current_heavy_hitters(spark, store).collect())
         )
-        hh._process_batch(_rows(spark, BATCHES[2]), 2, store, "key", 3)
+        fold_batch(_rows(spark, BATCHES[2]), 2, store, *hh.mg_fold("key", 3))
         assert (
             sorted(
                 map(tuple, hh.current_heavy_hitters(spark, store).collect())

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.streaming import histogram as hg
+from advanced_elb_logs_etl_spark.streaming.store import fold_batch
 
 S = 8
 
@@ -87,8 +88,8 @@ def test_negative_and_null_dropped_zero_reserved(spark):
 def test_quantile_bounds_hold_vs_exact(spark):
     vals = [int(1.37**i) + 1 for i in range(40)] * 3
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hist_") as store:
-        hg._process_batch(_vals(spark, vals[:60]), 0, store, "value", S)
-        hg._process_batch(_vals(spark, vals[60:]), 1, store, "value", S)
+        fold_batch(_vals(spark, vals[:60]), 0, store, *hg.histogram_fold("value", S))
+        fold_batch(_vals(spark, vals[60:]), 1, store, *hg.histogram_fold("value", S))
         out = hg.quantile_estimates(spark, store, [0.1, 0.5, 0.9, 0.99], S)
         rows = {r.q: r for r in out.collect()}
     srt = sorted(vals)
@@ -102,10 +103,10 @@ def test_quantile_bounds_hold_vs_exact(spark):
 
 def test_process_batch_retry_idempotent(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hist_") as store:
-        hg._process_batch(_vals(spark, [1, 2, 3]), 0, store, "value", S)
-        hg._process_batch(_vals(spark, [4, 5, 6]), 1, store, "value", S)
+        fold_batch(_vals(spark, [1, 2, 3]), 0, store, *hg.histogram_fold("value", S))
+        fold_batch(_vals(spark, [4, 5, 6]), 1, store, *hg.histogram_fold("value", S))
         first = hg.quantile_estimates(spark, store, [0.5], S).collect()
-        hg._process_batch(_vals(spark, [4, 5, 6]), 1, store, "value", S)
+        fold_batch(_vals(spark, [4, 5, 6]), 1, store, *hg.histogram_fold("value", S))
         again = hg.quantile_estimates(spark, store, [0.5], S).collect()
         assert [tuple(r) for r in first] == [tuple(r) for r in again]
 
@@ -129,7 +130,7 @@ def test_subbucket_power_of_two_guard(spark):
 
 def test_quantile_range_guard(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hist_") as store:
-        hg._process_batch(_vals(spark, [1, 2]), 0, store, "value", S)
+        fold_batch(_vals(spark, [1, 2]), 0, store, *hg.histogram_fold("value", S))
         with pytest.raises(ValueError):
             hg.quantile_estimates(spark, store, [0.5, 1.5], S)
 
@@ -179,7 +180,7 @@ def test_store_prunes_superseded_snapshots(spark):
 
     with tempfile.TemporaryDirectory(prefix="sparkgraft_hist_") as store:
         for i, vals in enumerate([[1, 2, 3], [4, 5, 6], [7, 8, 9]]):
-            hg._process_batch(_vals(spark, vals), i, store, "value", S)
+            fold_batch(_vals(spark, vals), i, store, *hg.histogram_fold("value", S))
         kept = sorted(
             d
             for d in os.listdir(os.path.join(store, "counts"))
@@ -190,7 +191,7 @@ def test_store_prunes_superseded_snapshots(spark):
             tuple(r)
             for r in hg.quantile_estimates(spark, store, [0.5], S).collect()
         ]
-        hg._process_batch(_vals(spark, [7, 8, 9]), 2, store, "value", S)
+        fold_batch(_vals(spark, [7, 8, 9]), 2, store, *hg.histogram_fold("value", S))
         again = [
             tuple(r)
             for r in hg.quantile_estimates(spark, store, [0.5], S).collect()

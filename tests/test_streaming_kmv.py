@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.operators import kmv
 from advanced_elb_logs_etl_spark.streaming import kmvstream as kms
+from advanced_elb_logs_etl_spark.streaming.store import fold_batch
 
 K = 8
 
@@ -42,11 +43,11 @@ def test_batch_fold_equals_single_build(spark):
 
 def test_process_batch_retry_idempotent(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_kmv_") as store:
-        kms._process_batch(_rows(spark, BATCHES[0]), 0, store, "key", K)
-        kms._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", K)
+        fold_batch(_rows(spark, BATCHES[0]), 0, store, *kms.kmv_fold("key", K))
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *kms.kmv_fold("key", K))
         first = sorted(r.h for r in kms.current_kmv(spark, store).collect())
         # a retried batch must read only batch-0 state and overwrite
-        kms._process_batch(_rows(spark, BATCHES[1]), 1, store, "key", K)
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *kms.kmv_fold("key", K))
         assert (
             sorted(r.h for r in kms.current_kmv(spark, store).collect())
             == first
@@ -56,7 +57,7 @@ def test_process_batch_retry_idempotent(spark):
 def test_store_prunes_superseded_snapshots(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_kmv_") as store:
         for i, keys in enumerate(BATCHES):
-            kms._process_batch(_rows(spark, keys), i, store, "key", K)
+            fold_batch(_rows(spark, keys), i, store, *kms.kmv_fold("key", K))
         hashes_dir = os.path.join(store, "hashes")
         kept = sorted(
             d for d in os.listdir(hashes_dir) if d.startswith("batch=")
@@ -168,16 +169,11 @@ def test_grouped_process_batch_retry_idempotent_and_missing_group(spark):
     forward verbatim (the no-sentinel argument, per group)."""
     import tempfile
 
+    fold = kms.kmv_fold_grouped(["hour"], "hour string", "key", K)
     with tempfile.TemporaryDirectory(prefix="sparkgraft_gkmv_") as store:
-        kms._process_batch_grouped(
-            _grows(spark, G_BATCHES[0]), 0, store, ["hour"],
-            "hour string", "key", K,
-        )
+        fold_batch(_grows(spark, G_BATCHES[0]), 0, store, *fold)
         # batch 1 has NO h2 rows: h2 state must survive unchanged
-        kms._process_batch_grouped(
-            _grows(spark, G_BATCHES[1]), 1, store, ["hour"],
-            "hour string", "key", K,
-        )
+        fold_batch(_grows(spark, G_BATCHES[1]), 1, store, *fold)
         first = _by_group(
             kms.current_kmv_grouped(spark, store, "hour string").collect()
         )
@@ -189,10 +185,7 @@ def test_grouped_process_batch_retry_idempotent_and_missing_group(spark):
             ).collect()
         )
         assert first == want01
-        kms._process_batch_grouped(  # retry of batch 1
-            _grows(spark, G_BATCHES[1]), 1, store, ["hour"],
-            "hour string", "key", K,
-        )
+        fold_batch(_grows(spark, G_BATCHES[1]), 1, store, *fold)  # retry
         assert (
             _by_group(
                 kms.current_kmv_grouped(spark, store, "hour string").collect()

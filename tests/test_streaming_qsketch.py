@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.operators import qsketch
 from advanced_elb_logs_etl_spark.streaming import qstream as qst
+from advanced_elb_logs_etl_spark.streaming.store import fold_batch
 
 K = 8
 
@@ -43,13 +44,13 @@ def test_batch_fold_equals_single_build(spark):
 
 def test_process_batch_retry_idempotent(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_qsk_") as store:
-        qst._process_batch(_rows(spark, BATCHES[0]), 0, store, "v", "id", K)
-        qst._process_batch(_rows(spark, BATCHES[1]), 1, store, "v", "id", K)
+        fold_batch(_rows(spark, BATCHES[0]), 0, store, *qst.q_fold("v", "id", K))
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *qst.q_fold("v", "id", K))
         first = sorted(
             (r.h, r.v) for r in qst.current_qsketch(spark, store).collect()
         )
         # a retried batch must read only batch-0 state and overwrite
-        qst._process_batch(_rows(spark, BATCHES[1]), 1, store, "v", "id", K)
+        fold_batch(_rows(spark, BATCHES[1]), 1, store, *qst.q_fold("v", "id", K))
         assert (
             sorted(
                 (r.h, r.v)
@@ -62,7 +63,7 @@ def test_process_batch_retry_idempotent(spark):
 def test_store_prunes_superseded_snapshots(spark):
     with tempfile.TemporaryDirectory(prefix="sparkgraft_qsk_") as store:
         for i, rows in enumerate(BATCHES):
-            qst._process_batch(_rows(spark, rows), i, store, "v", "id", K)
+            fold_batch(_rows(spark, rows), i, store, *qst.q_fold("v", "id", K))
         sample_dir = os.path.join(store, "sample")
         kept = sorted(
             d for d in os.listdir(sample_dir) if d.startswith("batch=")
@@ -139,14 +140,11 @@ def test_grouped_process_batch_retry_idempotent_and_missing_group(spark):
     """A batch that carries only group y must rewrite group x's prior
     rows verbatim (the state is the full per-group sample), and a
     retried batch reads only its predecessor state."""
+    fold = qst.q_fold_grouped(["g"], "g string", "v", "id", K)
     with tempfile.TemporaryDirectory(prefix="sparkgraft_qskg_") as store:
-        qst._process_batch_grouped(
-            _grows(spark, G_BATCHES[0]), 0, store, ["g"], "g string", "v", "id", K
-        )
+        fold_batch(_grows(spark, G_BATCHES[0]), 0, store, *fold)
         only_y = [r for r in G_BATCHES[2]]
-        qst._process_batch_grouped(
-            _grows(spark, only_y), 1, store, ["g"], "g string", "v", "id", K
-        )
+        fold_batch(_grows(spark, only_y), 1, store, *fold)
         cur = qst.current_qsketch_grouped(spark, store, "g string")
         first = sorted((r.g, r.h, r.v) for r in cur.collect())
         want_x = qsketch.q_build_grouped(
@@ -156,9 +154,7 @@ def test_grouped_process_batch_retry_idempotent_and_missing_group(spark):
             (r.g, r.h, r.v) for r in want_x.collect()
         )
         # retry batch 1: identical state afterwards
-        qst._process_batch_grouped(
-            _grows(spark, only_y), 1, store, ["g"], "g string", "v", "id", K
-        )
+        fold_batch(_grows(spark, only_y), 1, store, *fold)
         cur2 = qst.current_qsketch_grouped(spark, store, "g string")
         assert sorted((r.g, r.h, r.v) for r in cur2.collect()) == first
 

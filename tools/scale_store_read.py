@@ -63,11 +63,11 @@ def main() -> None:
                 )
             t0 = time.perf_counter()
             new_rows = store.read_latest_snapshot(
-                spark, root, schema, 2**31 - 1
+                spark, root, schema, store.LATEST
             ).count()
             new_s = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
-            old_rows = old_read(root, 2**31 - 1).count()
+            old_rows = old_read(root, store.LATEST).count()
             old_s = round(time.perf_counter() - t0, 3)
             assert new_rows == old_rows == 256
             print(
