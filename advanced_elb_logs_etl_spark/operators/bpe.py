@@ -13,7 +13,8 @@ exactly onto Spark:
             weighted by count (one hash agg);
             argmax pair -> ONE row to the driver (bounded by construction);
             merge = per-row array fold (narrow map, no shuffle);
-            localCheckpoint to keep the plan K-shallow.
+            one round of the fixpoint driver (operators/fixpoint.py),
+            which keeps the plan K-shallow.
 
 The merge fold is leftmost-greedy non-overlapping — the standard BPE
 semantics ('aaa' + merge (a,a) -> ['aa','a']) — implemented with
@@ -34,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import release_local_checkpoint
+from . import fixpoint
 
 __all__ = [
     "word_frequencies",
@@ -105,15 +107,15 @@ def bpe_train(
 
     Each round's driver transfer is ONE row (the argmax pair) — the loop
     never collects data-sized state.  The symbol table is checkpointed
-    per round: K rounds of nested aggregate() lambdas would otherwise
-    stack into one deep codegen expression."""
+    per round by the fixpoint driver: K rounds of nested aggregate()
+    lambdas would otherwise stack into one deep codegen expression."""
     vocab = word_frequencies(df, text_col, token_pattern).select(
         symbolize(F.col("word")).alias("syms"), "cnt"
     )
-    vocab = vocab.localCheckpoint(eager=True)
-
     merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, num_merges + 1):
+
+    def step(cur: fixpoint.Round) -> DataFrame | None:
+        vocab = cur.df
         pairs = (
             vocab.where(F.size("syms") >= 2)
             .select(
@@ -130,19 +132,13 @@ def bpe_train(
         )
         top = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1).collect()
         if not top or top[0]["n"] < min_pair_count:
-            break
+            return None
         a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((rank, a, b, n))
-        prev = vocab
-        vocab = vocab.select(
-            _merge_fold(F.col("syms"), a, b).alias("syms"), "cnt"
-        ).localCheckpoint(eager=True)
-        # localCheckpoint storage is NOT in the CacheManager (DataFrame
-        # .unpersist() / .rdd.unpersist() are both no-ops on it) — release
-        # the superseded round's blocks through the checkpoint's LogicalRDD
-        # leaf so K rounds hold one vocab copy, not K.
-        release_local_checkpoint(prev)
-    release_local_checkpoint(vocab)
+        merges.append((len(merges) + 1, a, b, n))
+        return vocab.select(_merge_fold(F.col("syms"), a, b).alias("syms"), "cnt")
+
+    # only the merge table is returned: free the final symbol table too
+    release_local_checkpoint(fixpoint.iterate(vocab, step, num_merges).state)
     return merges
 
 

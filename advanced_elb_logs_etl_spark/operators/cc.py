@@ -22,9 +22,7 @@ with component = the smallest doc id reachable through dup edges — so
 everywhere (same SQL twin: the recursive-CTE min-reachable-label
 closure).  tests/test_cc.py pins the parity (five graph shapes + a
 seeded union-find differential), the 120-link-chain round advantage,
-and the twin rehearsal; the catalog registration is queued for the r9
-reserved window slot (plans/catalog_r8.py sketch — it reuses the
-neardup_components oracle verbatim, rehearsed hash-green at sf0.01).
+and the twin rehearsal.
 
 Round structure (all pure DataFrame ops, no UDF):
 
@@ -46,14 +44,12 @@ Scale shape (100 TB):
     O(log n) rounds instead of O(diameter).
   - edges shrink monotonically toward one-edge-per-node (star forest):
     later rounds are CHEAPER, not constant.
-  - each round's output is localCheckpoint'ed (the neardup_components
-    precedent): lineage stays flat, round N+1 never replays round N.
-  - no driver-side state beyond the per-round count used by the
-    convergence check.
+  - rounds run on the fixpoint driver (operators/fixpoint.py); the
+    only driver-side state is its per-round count.
 
 Reference parity: the reference pipeline (advanced_elb_logs_etl.py) has
-no graph stage; this extends the repo's dedup surface
-(dedup.neardup_components:442) with the round-complexity-safe variant.
+no graph stage; this extends the repo's dedup surface with the
+round-complexity-safe variant.
 """
 
 from __future__ import annotations
@@ -62,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import release_local_checkpoint
+from . import fixpoint
 
 __all__ = ["alternating_components"]
 
@@ -134,31 +131,20 @@ def alternating_components(
         .distinct()
     )
 
-    # Materialize once: `pairs` is typically a full LSH pipeline and the
-    # loop references the edge frame several times per round.
-    edges = _canonical_edges(pairs, id_a, id_b).localCheckpoint(eager=True)
-    prev_count = edges.count()
+    def same_edges(prev: fixpoint.Round, cur: fixpoint.Round) -> bool:
+        # Distinct sets: equal counts + cur ⊆ prev  <=>  equal sets.
+        return cur.rows == prev.rows and cur.df.exceptAll(prev.df).isEmpty()
 
-    owned = None  # loop-created checkpoint eligible for release (r15)
-    for _ in range(max_iterations):
-        if prev_count == 0:
-            break
-        # LAZY checkpoint + count fuses the per-round materialization
-        # job with the convergence count (the k_core r15 discipline);
-        # the plan stays a flat LogicalRDD leaf either way.
-        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        nxt_count = nxt.count()
-        # Distinct sets: equal counts + nxt ⊆ edges  <=>  equal sets.
-        converged = nxt_count == prev_count and nxt.exceptAll(edges).isEmpty()
-        # The superseded round's blocks are dead once the check above
-        # has run — release them so storage stays O(1), not O(rounds).
-        if owned is not None:
-            release_local_checkpoint(owned)
-        owned = nxt
-        edges, prev_count = nxt, nxt_count
-        if converged:
-            break
-    else:
+    # Round 0 materializes the edge frame once: `pairs` is typically a
+    # full LSH pipeline and every round references the edges twice.
+    fp = fixpoint.iterate(
+        _canonical_edges(pairs, id_a, id_b),
+        lambda cur: _small_star(_large_star(cur.df)),
+        max_iterations,
+        same_edges,
+    )
+    if not fp.converged:
+        release_local_checkpoint(fp.state)
         raise RuntimeError(
             f"alternating_components did not converge in {max_iterations} "
             "rounds — the proven bound is O(log^2 n), so this indicates "
@@ -167,7 +153,7 @@ def alternating_components(
         )
 
     # Fixpoint edge set is a star forest: (child -> component root).
-    child_labels = edges.select(
+    child_labels = fp.state.select(
         F.col("hi").alias("doc_id"), F.col("lo").alias("component")
     )
     return (

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import minhash_signature, shingles
+from ..session import release_local_checkpoint
+from . import fixpoint
 
 NUM_HASHES = 16
 NUM_BANDS = 4
@@ -455,9 +457,10 @@ def neardup_components(
     diameter; near-dup graphs are unions of small cliques, so convergence
     is 2-3 rounds in practice. Each round is one shuffle (groupBy node).
 
-    This is deliberately an ITERATIVE driver loop over lazy plans — the
-    class of algorithm SQL can't express in one query (the driver records a
-    rows-only check; pytest pins the clustering on known corpora).
+    This is deliberately an ITERATIVE driver loop — the class of
+    algorithm SQL can't express in one query (the driver records a
+    rows-only check; pytest pins the clustering on known corpora).  Rounds
+    run on the fixpoint driver (operators/fixpoint.py).
     """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -474,13 +477,15 @@ def neardup_components(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    for _ in range(max_iterations):
+
+    def step(cur: fixpoint.Round) -> DataFrame:
         # One label-propagation round = ONE join (ship labels across edges)
         # + ONE groupBy (min over the closed neighborhood; the self row rides
         # along in the union so no second join against `labels` is needed).
         # The previous label is folded into the same aggregation via the
-        # is_self lane, so the fixpoint check below costs no extra join —
-        # just an isEmpty() scan over the already-checkpointed blocks.
+        # is_self lane, so the fixpoint check costs no extra join — just an
+        # isEmpty() scan over the round's materialized blocks.
+        labels = cur.df.select("node", "component")
         msgs = edges.join(labels, edges.dst == labels.node).select(
             F.col("src").alias("node"),
             F.col("component"),
@@ -489,7 +494,7 @@ def neardup_components(
         closed = msgs.union(
             labels.select("node", "component", F.lit(True).alias("is_self"))
         )
-        updated = (
+        return (
             closed.groupBy("node")
             .agg(
                 F.min("component").alias("component"),
@@ -497,21 +502,22 @@ def neardup_components(
             )
             .withColumn("_changed", F.col("component") != F.col("_old"))
             .drop("_old")
-            # localCheckpoint truncates the growing lineage so round N+1
-            # doesn't replay round N; it is also the round's only
-            # materialization job.
-            .localCheckpoint(eager=True)
         )
-        labels = updated.drop("_changed")
-        if updated.filter(F.col("_changed")).isEmpty():
-            break
-    else:
+
+    fp = fixpoint.iterate(
+        labels,
+        step,
+        max_iterations,
+        lambda _prev, cur: cur.df.filter(F.col("_changed")).isEmpty(),
+    )
+    if not fp.converged:
+        release_local_checkpoint(fp.state)
         raise RuntimeError(
             f"neardup_components did not converge in {max_iterations} rounds "
             "(dup-graph diameter too large) — raise max_iterations or pre-split "
             "the graph; returning partial labels would silently under-merge"
         )
-    return labels.select(F.col("node").alias("doc_id"), "component")
+    return fp.state.select(F.col("node").alias("doc_id"), "component")
 
 
 def leakage_safe_split(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import dround
 from ..session import release_local_checkpoint
+from . import fixpoint
 
 DAMPING = 0.85
 _SNAP = 8  # per-iteration decimal snap scale (see module docstring)
@@ -52,9 +53,9 @@ def pagerank(
     checkpointed static frames.
 
     ``tol``: when set, iterate until max |r' - r| <= tol (checked per
-    round on the materialized rank frame; each round localCheckpoints so
-    lineage stays flat), up to ``max_iterations``; ``iterations`` is
-    ignored in this mode.
+    round on the materialized rank frames), up to ``max_iterations``;
+    ``iterations`` is ignored in this mode.  Rounds run on the fixpoint
+    driver (operators/fixpoint.py) in every mode.
 
     ``dangling``: "auto" (default) probes the graph once for out-edge-less
     nodes — correct for arbitrary input, at the cost of one extra setup
@@ -80,17 +81,13 @@ def pagerank(
             f"dangling must be 'auto' or 'none', got {dangling!r} — a typo "
             "here would silently re-enable the setup probe"
         )
-    # The static frames are referenced by EVERY iteration's join tree.
-    # Checkpoint them once at setup — in ALL modes — so iteration K reads
-    # materialized blocks instead of re-running the distinct-over-union edge
-    # pipeline K times (at sf0.1 that recomputation doubled the catalog
-    # query's latency; at crawl scale it would be a non-starter). The edge
-    # frame is O(E) but so is one iteration's shuffle, so the one-time
-    # materialization cost is amortized from the first round. outdeg is
-    # folded into the edge frame here so each iteration runs ONE join
-    # (ranks ⋈ ew) plus the dst aggregation instead of a second per-round
-    # deg join; `rank / outdeg` stays the same double expression the SQL
-    # twin computes, so determinism is unaffected.
+    # The static frames are referenced by EVERY iteration's join tree:
+    # checkpoint them once at setup so iteration K reads blocks instead of
+    # re-running the edge pipeline K times (at sf0.1 that recomputation
+    # doubled the catalog query's latency).  outdeg is folded into the
+    # edge frame so each iteration runs ONE join (ranks ⋈ ew) plus the dst
+    # aggregation; `rank / outdeg` stays the same double expression the
+    # SQL twin computes, so determinism is unaffected.
     e = edges.select("src", "dst")
     if not assume_distinct:
         e = e.distinct()
@@ -99,12 +96,9 @@ def pagerank(
     if dangling == "none":
         # Every node has an out-edge (the mode's contract), so the node
         # universe IS the out-degree frame's key set — skip the 2E-row
-        # union+distinct pass entirely and reuse the degree aggregate
-        # (one materialization serves both the ew join and the node set).
-        # LAZY checkpoints (r15): the plans are LogicalRDD leaves either
-        # way; `nodes.count()` below materializes deg, and the first
-        # iteration's join materializes ew — two fewer setup jobs than
-        # the eager form, identical blocks afterwards.
+        # union+distinct pass and reuse the degree aggregate.  Lazy
+        # checkpoints: `nodes.count()` below materializes deg and the
+        # first iteration materializes ew — two fewer setup jobs.
         deg = deg.localCheckpoint(eager=False)
         nodes = deg.select(F.col("src").alias("node"))
     ew = e.join(deg, "src").localCheckpoint(eager=False)  # src, dst, outdeg
@@ -126,8 +120,9 @@ def pagerank(
             dangling_nodes = dangling_nodes.localCheckpoint(eager=True)
     base = float(1.0) / n
     ranks = nodes.select("node", dround(F.lit(base), _SNAP).alias("rank"))
-    rounds = max_iterations if tol is not None else iterations
-    for _ in range(rounds):
+
+    def step(cur: fixpoint.Round) -> DataFrame:
+        ranks = cur.df
         if has_dangling:
             # D = summed rank of out-edge-less nodes, snapped so the scalar
             # re-entering the plan is a stable decimal, not an ulp lottery.
@@ -145,7 +140,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("in_mass"))
         )
-        new_ranks = nodes.join(contrib, "node", "left").select(
+        return nodes.join(contrib, "node", "left").select(
             "node",
             dround(
                 F.lit((1.0 - damping) / n)
@@ -154,26 +149,19 @@ def pagerank(
                 _SNAP,
             ).alias("rank"),
         )
-        if tol is not None or has_dangling:
-            # dangling/convergence modes run a scalar job against `ranks`
-            # every round — checkpoint so round N+1 reads materialized
-            # blocks instead of replaying rounds 1..N.  Lazy (r15): the
-            # round's own scalar job (delta below, or the next round's
-            # dmass) materializes the blocks — one fewer job per round.
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-        if tol is not None:
-            delta = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "node")
-                .agg(F.max(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
-                .first()["d"]
-            )
-            ranks = new_ranks
-            if delta is not None and delta <= tol:
-                break
-        else:
-            ranks = new_ranks
-    return ranks
+
+    def within_tol(prev: fixpoint.Round, cur: fixpoint.Round) -> bool:
+        delta = (
+            cur.df.alias("a")
+            .join(prev.df.alias("b"), "node")
+            .agg(F.max(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
+            .first()["d"]
+        )
+        return delta is not None and delta <= tol
+
+    if tol is None:
+        return fixpoint.iterate(ranks, step, iterations).state
+    return fixpoint.iterate(ranks, step, max_iterations, within_tol).state
 
 
 def supplier_part_edges(lineitem: DataFrame) -> DataFrame:
@@ -255,6 +243,22 @@ def _mirror(edges: DataFrame) -> DataFrame:
     """Both directions of a canonical [u < v] edge list (distinct by
     construction since u != v)."""
     return edges.select("u", "v").union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(u, _deg) of a canonical edge list: one node-keyed hash agg."""
+    return _mirror(edges).groupBy("u").agg(F.count(F.lit(1)).alias("_deg"))
+
+
+def _keep_both_ends(edges: DataFrame, keep: DataFrame) -> DataFrame:
+    """The edges with both ends in ``keep`` (one ``_keep`` column).  ONE
+    survivor frame probed by both semi-joins: the two exchanges
+    canonicalize identically, so exchange reuse builds it once."""
+    return (
+        edges.join(keep, edges["u"] == F.col("_keep"), "left_semi")
+        .join(keep, edges["v"] == F.col("_keep"), "left_semi")
+        .select("u", "v")
+    )
 
 
 def triangle_stats(
@@ -420,9 +424,11 @@ def k_hop_reachability(
     join and in its anti-join) plus the one before it, so the logical
     plan grows ~(1+sqrt(2))^k nodes, not k.  That is cheap at the
     catalog's k=2 (plan 661 -> 800 lines) but a k~10 caller would pay
-    minutes of analysis and planning on the driver — keep k small, and
-    for iterate-to-convergence walks use pagerank's checkpoint
-    discipline.
+    minutes of analysis and planning on the driver — keep k small.
+    The hops are not on the fixpoint driver (operators/fixpoint.py):
+    every hop's pair stream feeds the final count_distinct, so no hop
+    is ever superseded and there is no round to release; bounding the
+    plan needs a different fold, not the driver's checkpoint rule.
 
     ``broadcast_frontier``: when the caller KNOWS the seed set (and so
     every hop's frontier) is dimension-bounded — the seed-restricted
@@ -753,9 +759,9 @@ def lpa_communities(
 
     Scale shape (100 TB): per round one hash agg on (node, label) over
     the mirrored edge-message join and one max_by agg per node — two
-    shuffles keyed on node ids, same budget as a pagerank round; the
-    label frame localCheckpoints per round (flat lineage, the pagerank
-    discipline).  Label state is one row per node."""
+    shuffles keyed on node ids, same budget as a pagerank round; rounds
+    run on the fixpoint driver (operators/fixpoint.py).  Label state is
+    one row per node."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     # Pre-partition the mirrored adjacency by the probe key `v` BEFORE
@@ -770,9 +776,9 @@ def lpa_communities(
         und.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
+
+    def step(cur: fixpoint.Round) -> DataFrame:
         # SHUFFLE_HASH, not broadcast: the label frame is small, but a
         # per-round driver-built broadcast alongside the resident edge
         # checkpoint blocks trips the 1g-default driver's free-memory
@@ -780,7 +786,7 @@ def lpa_communities(
         # probe costs one node-keyed exchange of und per round — the
         # pagerank budget — with no driver-side table build.
         msgs = und.join(
-            labels.withColumnRenamed("node", "v").hint("shuffle_hash"),
+            cur.df.withColumnRenamed("node", "v").hint("shuffle_hash"),
             "v",
         ).select(F.col("u").alias("node"), "label")
         counts = msgs.groupBy("node", "label").agg(
@@ -791,17 +797,13 @@ def lpa_communities(
         # accepted by _mirror and the other graph operators; negating
         # the label would require numeric ids, ADVICE r11).  cnt is
         # always numeric, so -cnt is safe.
-        new = counts.groupBy("node").agg(
+        return counts.groupBy("node").agg(
             F.min_by(
                 "label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
             ).alias("label")
         )
-        # LAZY checkpoint (r15): the plan is a LogicalRDD leaf either
-        # way (flat lineage preserved); the next round's shuffle stages
-        # — or the caller's final action — materialize the blocks, so
-        # each round stops paying a separate materialization job.
-        labels = new.localCheckpoint(eager=False)
-    return labels
+
+    return fixpoint.iterate(labels, step, rounds).state
 
 
 def k_core(
@@ -810,7 +812,6 @@ def k_core(
     max_rounds: int = 20,
     node_join: str = "auto",
     assume_distinct: bool = False,
-    coalesce_rows: int = 200_000,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman 1983, "Network
     structure and minimum degree" — public method; the distributed
@@ -832,12 +833,13 @@ def k_core(
     Scale shape (100 TB): per round one degree agg over the mirrored
     survivor edges (one node-keyed shuffle, map-side combinable) and
     two hash semi-joins of the edge set against the >= k survivor
-    frame; the edge frame localCheckpoints per round (flat lineage, the
-    pagerank/LPA discipline).  Rounds needed = the graph's peel depth
-    (the degeneracy ordering's layer count along this k), typically
-    O(10) for web/co-purchase graphs; ``max_rounds`` bounds the fold
-    either way, and each round STRICTLY shrinks the edge set or stops,
-    so work is monotone decreasing.
+    frame; rounds run on the fixpoint driver (operators/fixpoint.py),
+    whose row-derived coalesce repacks the shrinking survivor set (the
+    r15 anti-scaling fix, OPTIMIZATION_r15.md).  Rounds needed = the
+    graph's peel depth (the degeneracy ordering's layer count along
+    this k), typically O(10) for web/co-purchase graphs; ``max_rounds``
+    bounds the fold either way, and each round STRICTLY shrinks the
+    edge set or stops, so work is monotone decreasing.
 
     ``node_join`` picks the semi-join strategy for the node-sized
     survivor frame: "auto" (default) leaves it to AQE, which
@@ -852,86 +854,40 @@ def k_core(
     driver-memory-safe shape).
 
     ``assume_distinct``: the caller certifies the input edge set is
-    already canonical-distinct AND cheap to re-scan (persisted or
-    checkpointed) — skips the round-0 distinct + localCheckpoint copy.
-    Callers peeling the SAME materialized frame at several k values
-    (the kcore gate) would otherwise pay that copy once per k.
-
-    ``coalesce_rows``: scale-adaptive survivor repacking (guide §2.2 —
-    fewer, larger partitions).  Before each round's checkpoint the
-    survivor frame is ``coalesce``d to ceil(prev_count / coalesce_rows)
-    partitions: as the peel shrinks the edge set, the per-round stages
-    stop paying one near-empty task per original partition (at
-    local[32] that fixed 32-tasks-per-stage floor across 12+ rounds x 3
-    peels was the measured r15 anti-scaling culprit — warm 16.6 s at 32
-    cores vs 6.8 s at 8 on identical code).  ``coalesce`` only ever
-    MERGES: at cluster scale a billion-edge survivor set computes a
-    partition target far above the frame's actual partition count and
-    the call is a no-op, so the knob is inert exactly where the
-    partitioning is already byte-sized by AQE.  0 disables."""
+    already canonical-distinct AND a checkpoint — skips the round-0
+    distinct + checkpoint copy (the driver counts a checkpoint leaf
+    instead of copying it).  Callers peeling the SAME materialized
+    frame at several k values (the kcore gate) would otherwise pay that
+    copy once per k."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     if node_join not in ("auto", "broadcast", "shuffle_hash"):
         raise ValueError(f"unknown node_join {node_join!r}")
-    if coalesce_rows < 0:
-        raise ValueError(f"coalesce_rows must be >= 0, got {coalesce_rows}")
     cur = edges.select("u", "v")
     if not assume_distinct:
-        cur = cur.distinct().localCheckpoint(eager=True)
-    cur_n = cur.count()
-    owned = None  # the loop-created checkpoint eligible for release
-    for _ in range(max_rounds):
-        deg = (
-            _mirror(cur)
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-        )
-        # ONE survivor frame probed by BOTH semi-joins (renamed so the
-        # second join resolves unambiguously): the two broadcast/shuffle
-        # exchanges canonicalize identically, so exchange/stage reuse
-        # builds the keep relation once per round instead of twice.
-        keep = deg.filter(F.col("_deg") >= F.lit(int(k))).select(
-            F.col("u").alias("_keep")
-        )
+        cur = cur.distinct()
+
+    def step(r: fixpoint.Round) -> DataFrame:
+        keep = _degrees(r.df).filter(F.col("_deg") >= F.lit(int(k)))
+        keep = keep.select(F.col("u").alias("_keep"))
         if node_join != "auto":
             keep = keep.hint(node_join)
-        nxt = (
-            cur.join(keep, cur["u"] == F.col("_keep"), "left_semi")
-            .join(keep, cur["v"] == F.col("_keep"), "left_semi")
-            .select("u", "v")
-        )
-        if coalesce_rows:
-            nxt = nxt.coalesce(max(1, -(-cur_n // coalesce_rows)))
-        # LAZY checkpoint + count: one job materializes the round AND
-        # returns the fixpoint count (the eager form paid a separate
-        # materialization job before the count every round).  The
-        # logical plan is a LogicalRDD leaf either way, so lineage
-        # stays flat — the failed r14 persist experiment's deep-plan
-        # trap does not apply.
-        nxt = nxt.localCheckpoint(eager=False)
-        nxt_n = nxt.count()
-        # Release the superseded round's blocks now (storage stays O(1)
-        # per peel instead of O(rounds)); never the caller's input frame.
-        if owned is not None:
-            release_local_checkpoint(owned)
-        owned = nxt
-        cur = nxt
-        # An EMPTY round is also a fixpoint (the empty graph peels to
-        # itself), so avalanched k values stop immediately instead of
-        # paying one more degree-agg round.
-        if nxt_n == cur_n or nxt_n == 0:
-            break
-        cur_n = nxt_n
-    return cur
+        return _keep_both_ends(r.df, keep)
+
+    # An EMPTY round is also a fixpoint (the empty graph peels to
+    # itself), so avalanched k values stop immediately instead of
+    # paying one more degree-agg round.
+    return fixpoint.iterate(
+        cur, step, max_rounds, lambda prev, nxt: nxt.rows in (prev.rows, 0)
+    ).state
 
 
 def densest_subgraph_peel(
     edges: DataFrame,
     eps_tenths: int = 1,
     max_rounds: int = 30,
-    node_join: str = "auto",
 ) -> DataFrame:
     """Greedy densest-subgraph peeling (Bahmani, Kumar & Vassilvitskii
     2012, "Densest subgraph in streaming and MapReduce", PVLDB 5(5) —
@@ -961,61 +917,33 @@ def densest_subgraph_peel(
     twin matches bit-for-bit.
 
     Scale shape (100 TB): per round one degree agg over the mirrored
-    survivor edges (node-keyed, map-side combinable) checkpointed at
-    node size, two hash semi-joins of the edge set against the
-    survivor frame, and two bounded scalar counts (n, m — the k_core
-    fixpoint-count discipline); the survivor set shrinks geometrically
-    by the eps/(1+eps) bound, so late rounds are nearly free and
-    ``max_rounds`` = 30 covers graphs up to ~e^(3*30/2) nodes at
-    eps=0.1.  ``node_join`` as in k_core ("auto" = AQE runtime-sizes
-    the survivor semi-joins; force "broadcast" for dimension-bounded
-    node universes, "shuffle_hash" for driver-memory-safe pure
-    shuffles)."""
+    survivor edges (node-keyed, map-side combinable) held at node size
+    and counted (n), and two hash semi-joins of the edge set against
+    the survivor frame, counted (m) — both on the fixpoint driver
+    (operators/fixpoint.py); AQE runtime-sizes the semi-joins.  The
+    survivor set shrinks geometrically by the eps/(1+eps) bound, so late
+    rounds are nearly free and ``max_rounds`` = 30 covers graphs up to
+    ~e^(3*30/2) nodes at eps=0.1."""
     if eps_tenths < 1:
         raise ValueError(f"eps_tenths must be >= 1, got {eps_tenths}")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    if node_join not in ("auto", "broadcast", "shuffle_hash"):
-        raise ValueError(f"unknown node_join {node_join!r}")
-    spark = edges.sparkSession
-    cur = edges.select("u", "v").distinct().localCheckpoint(eager=True)
-    m = cur.count()
     rows: list[tuple[int, int, int, int]] = []
-    owned_cur = None  # loop-created checkpoints eligible for release
-    owned_deg = None  # (the k_core fuse+release discipline, r15)
-    for r in range(max_rounds):
+
+    def step(r: fixpoint.Round) -> DataFrame | None:
+        m = r.rows
         if m == 0:
-            break
-        # lazy checkpoint + count: one job materializes AND counts
-        deg = (
-            _mirror(cur)
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .localCheckpoint(eager=False)
-        )
-        n = deg.count()
-        if owned_deg is not None:
-            release_local_checkpoint(owned_deg)
-        owned_deg = deg
-        rows.append((r, n, m, (1_000_000 * m) // n))
-        # delete deg <= 2*(1+eps)*m/n  <=>  deg*10*n <= 2*(10+eps10)*m;
-        # ONE renamed survivor frame probed by both semi-joins so the
-        # exchange canonicalizes identically and builds once per round
+            return None
+        deg, n = r.hold(_degrees(r.df))
+        rows.append((len(rows), n, m, (1_000_000 * m) // n))
+        # delete deg <= 2*(1+eps)*m/n  <=>  deg*10*n <= 2*(10+eps10)*m
         keep = deg.filter(
             F.col("_deg") * F.lit(10 * n) > F.lit(2 * (10 + eps_tenths) * m)
-        ).select(F.col("u").alias("_keep"))
-        if node_join != "auto":
-            keep = keep.hint(node_join)
-        cur = (
-            cur.join(keep, cur["u"] == F.col("_keep"), "left_semi")
-            .join(keep, cur["v"] == F.col("_keep"), "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
         )
-        m = cur.count()
-        if owned_cur is not None:
-            release_local_checkpoint(owned_cur)
-        owned_cur = cur
-    return spark.createDataFrame(
+        return _keep_both_ends(r.df, keep.select(F.col("u").alias("_keep")))
+
+    final = fixpoint.iterate(edges.select("u", "v").distinct(), step, max_rounds)
+    release_local_checkpoint(final.state)  # only the report is returned
+    return edges.sparkSession.createDataFrame(
         rows, "round long, n_nodes long, n_edges long, density_micro long"
     ).orderBy("round")

@@ -47,6 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from . import fixpoint
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -493,17 +495,20 @@ def refine_centroids(
 
     Physical form: posexplode the vectors to (cluster, dim, value) rows and
     hash-aggregate per (cluster, dim) — codegen, one shuffle per iteration,
-    no driver-side math. Empty clusters keep their previous centroid.
+    no driver-side math; iterations run on the fixpoint driver
+    (operators/fixpoint.py). Empty clusters keep their previous centroid.
     Note: avg() accumulates doubles in partition order, so centroid values
     are reproducible only up to floating ulps across different partition
     layouts — do not build bit-exact contracts on refined centroids.
     Returns (vec_id=cluster id, embedding=array<double>) usable directly as
     the `centroids` argument of ivf_topk / assign_clusters.
     """
-    current = centroids.select(
+    seeds = centroids.select(
         F.col(id_col), F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_col)
     )
-    for _ in range(iterations):
+
+    def step(cur: fixpoint.Round) -> DataFrame:
+        current = cur.df
         assigned = assign_clusters(vectors, current, id_col=id_col, vec_col=vec_col)
         dims = assigned.select(
             "cluster", F.posexplode(F.col(vec_col)).alias("dim", "v")
@@ -520,8 +525,9 @@ def refine_centroids(
         )
         # empty clusters vanish from `means`; keep their old centroid
         kept = current.join(means.select(F.col(id_col).alias("_k")), current[id_col] == F.col("_k"), "left_anti")
-        current = means.unionByName(kept).localCheckpoint(eager=True)
-    return current
+        return means.unionByName(kept)
+
+    return fixpoint.iterate(seeds, step, iterations).state
 
 
 def semantic_dedup(

@@ -120,8 +120,8 @@ def q_kcore_copurchase_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache inside every peel round read 25-26 s vs 13 s for
     checkpoint-block scans — the r14 A/B in OPTIMIZATION_r14.md.)  Per
     round one degree agg + two semi-joins over the SURVIVOR set
-    (monotone shrinking), with per-round checkpoints (flat lineage)
-    and early stop at the fixpoint; the report is one exploded
+    (monotone shrinking), on the fixpoint driver (operators/fixpoint.py)
+    with early stop at the fixpoint; the report is one exploded
     distinct-count agg per k over the final core — rows = |KCORE_KS|.
     node_join="broadcast": the node universe here is the PART
     DIMENSION (dimension-bounded at any corpus scale), so the

@@ -663,8 +663,9 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus-sized word-frequency reduction, then every round is
     O(|vocab|) — explode adjacent symbol pairs, one hash agg, a 1-row
-    argmax to the driver, a narrow merge fold, localCheckpoint. The
-    corpus is touched exactly once regardless of merge count."""
+    argmax to the driver, a narrow merge fold, one fixpoint-driver round
+    (operators/fixpoint.py). The corpus is touched exactly once
+    regardless of merge count."""
     from ..operators.bpe import bpe_train_df
 
     docs = _t(spark, sf_dir, "documents")

@@ -82,41 +82,7 @@ FROM flags
 """
 
 
-# ---------------------------------------------------------------------------
-# QUEUED for the r9 window (NOT registered in r8 — the freeze
-# discipline allows additions only in-window, and the r8 window was
-# full).  STATUS: ALL SIX stash entries below and in the later comment
-# blocks were REGISTERED in round 9 (plans/catalog_r9.py) using these
-# exact pre-validated oracles; these blocks remain as the validation
-# record.
-# The recommended r9 move registers BOTH (see the plans/catalog.py queue
-# comment for the displacement rationale):
-#
-# 1. operators/cc.py (alternating large/small-star connected components,
-#    the O(log n)-round drop-in for dedup.neardup_components) is
-#    pytest-pinned in tests/test_cc.py (labeling parity on five graph
-#    shapes, the 120-link-chain round advantage, a union-find
-#    differential, and a recursive-CTE twin rehearsal).  Because it is a
-#    drop-in, the registration reuses the EXACT neardup_components oracle:
-#      from ..operators import cc
-#      from .catalog_llm import _COMPONENTS_ORACLE, _hashed_docs
-#      @register("alternating_components", _COMPONENTS_ORACLE)
-#      def q_alternating_components(spark, sf_dir):
-#          docs = _t(spark, sf_dir, "documents")
-#          pairs = dedup.minhash_neardup_pairs(docs, hashed=_hashed_docs(spark, sf_dir))
-#          return cc.alternating_components(pairs)
-#    Rehearsed hash-green against that oracle at sf0.01 in this r8 session.
-#
-# 2. operators/lm.py (stupid-backoff bigram LM fluency selection): the
-#    TABLE-BOUND oracle below was validated hash-identical (50/50 rows,
-#    value-exact integer micro-nats + the IEEE-identical average) against
-#    the Spark side at sf0.01 on a vanilla session in this r8 session:
-#      @register("lm_perplexity_filter", _LM_ORACLE_QUEUED_R9)
-#      def q_lm_perplexity_filter(spark, sf_dir):
-#          docs = _t(spark, sf_dir, "documents")
-#          model = lm.train_bigram_lm(docs, top_v=_LM_TOP_V)
-#          return lm.select_most_fluent(docs, model, k=_LM_K)
-# ---------------------------------------------------------------------------
+# Oracles pre-validated in r8 and registered by plans/catalog_r9.py.
 
 _LM_TOP_V = 512
 _LM_K = 50
@@ -175,18 +141,6 @@ FROM agg ORDER BY avg_nll, nll_micro, doc_id LIMIT {_LM_K}
 # while Spark emits long ("3"); the un-cast column was the verified root
 # cause of the r9+r10 driver hash-mismatches.
 
-# ---------------------------------------------------------------------------
-# Also pre-validated this session (r10-queue candidate): BM25 retrieval,
-# table-bound at query terms {join, vector, checkpoint, gardenpath} (mixed
-# document frequencies + one absent term), k=50 — hash-identical 50/50 vs
-# operators/retrieval.bm25_topk at sf0.01 (exact integer micro-unit
-# scores; ties broken by id on both sides). Registration:
-#   @register("bm25_topk", _BM25_ORACLE_QUEUED_R10)
-#   def q_bm25_topk(spark, sf_dir):
-#       docs = _t(spark, sf_dir, "documents")
-#       return retrieval.bm25_topk(docs, _BM25_TERMS, k=_BM25_K)
-# ---------------------------------------------------------------------------
-
 _BM25_TERMS = ["join", "vector", "checkpoint", "gardenpath"]
 _BM25_K = 50
 
@@ -236,24 +190,3 @@ def q_gopher_rules_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-level rules fold over split arrays per row.  Trivially
     partition-parallel at 100 TB; output row count equals input."""
     return rules.rule_filter_battery(_t(spark, sf_dir, "documents"))
-
-# ---------------------------------------------------------------------------
-# pq_adc_topk gate design (pre-validated this r8 session — the last stash
-# candidate without an oracle on file).  Same bounded-recall shape as
-# ivf_cosine_topk: the gate computes ADC top-10 for the 4 query vectors
-# (vec_id < 4) AND the exact micro-int L2 ground truth (pq._sqdist over
-# snap_micro columns — the quarantined verification lane), and emits ONE
-# row (n_queries, n_results, recall_ok) where recall_ok asserts overall
-# recall@10 >= 0.25.  Measured at sf0.01 with M=8, K=8, iters=2:
-# recall = 0.40 (16/40 hits; K=4 gives 0.30, K=16 gives 0.35 — K=8 is
-# the registration setting).  0.25 is the conservative envelope: the
-# whole pipeline is deterministic, and a broken ADC/encode collapses
-# recall to ~k/corpus ~= 0.02, far below the bar.  Oracle (the IVF
-# pattern — exact counts + literal TRUE):
-#   SELECT count(*)::BIGINT AS n_queries,
-#          (count(*) * 10)::BIGINT AS n_results,
-#          TRUE AS recall_ok
-#   FROM embeddings WHERE vec_id < 4
-# Production form for bench (the decomposition policy): ADC search only.
-# With this, ALL SIX stash candidates have pre-rehearsed gate designs.
-# ---------------------------------------------------------------------------

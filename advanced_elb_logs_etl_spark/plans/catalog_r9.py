@@ -163,7 +163,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall_ok asserts overall recall@10 >= 0.25 against the exact
     micro-int L2 ground truth (pq._sqdist over snap_micro columns — the
     quarantined verification lane).  Measured 0.40 at sf0.01 with
-    M=8/K=8/iters=2 (plans/catalog_r8.py gate design); the whole
+    M=8/K=8/iters=2 (K=4 gave 0.30, K=16 0.35); the whole
     pipeline is deterministic, and a broken encode/ADC collapses recall
     to ~k/corpus ~= 0.02, far below the bar.
 

@@ -398,8 +398,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring), so the unrolled SQL twin is value-exact, not tolerance-based.
 
     Scale: K shuffles total (one join+agg per iteration), rank state O(N),
-    lineage depth fixed at K. No driver loop beyond the counter; node count
-    is the only scalar fold."""
+    one fixpoint-driver round per iteration (operators/fixpoint.py); node
+    count is the only scalar fold."""
     li = _t(spark, sf_dir, "lineitem")
     # dangling="none": supplier_part_edges emits both directions, so every
     # node has an out-edge by construction — skip the setup probe job.

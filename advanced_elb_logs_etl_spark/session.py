@@ -136,6 +136,16 @@ def shuffle_partitions_for(
                // target_partition_bytes)
 
 
+def is_checkpoint_leaf(df) -> bool:
+    """True when ``df`` optimizes to a bare checkpoint (``LogicalRDD``)
+    leaf; False (never raises) when the internal API moved."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return plan.getClass().getName().endswith("LogicalRDD")
+    except Exception:  # pragma: no cover - defensive: internals moved
+        return False
+
+
 def release_local_checkpoint(df) -> bool:
     """Best-effort release of a ``localCheckpoint(eager=True)`` frame's
     block storage.
@@ -145,8 +155,8 @@ def release_local_checkpoint(df) -> bool:
     which the CacheManager never tracks and ``.rdd`` re-derives rather
     than returns.  The one handle to the persisted RDD is the
     ``LogicalRDD`` leaf the checkpoint left as the frame's plan — reach
-    it through the JVM and unpersist (non-blocking).  Iterative
-    operators (BPE training) call this per superseded round so K rounds
+    it through the JVM and unpersist (non-blocking).  The fixpoint driver
+    (operators/fixpoint.py) calls this per superseded round so K rounds
     hold one working-set copy, not K; without it the blocks linger until
     the ContextCleaner GCs the frame.
 

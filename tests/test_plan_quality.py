@@ -8,12 +8,17 @@ regression here is a scale regression even if every value stays correct.
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from advanced_elb_logs_etl_spark.operators.sessions import add_session_features
 from advanced_elb_logs_etl_spark.plans.catalog import CATALOG
 from advanced_elb_logs_etl_spark.sources.testdata import load_table
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 
 SF = "/root/testdata/sf0.001"
 
@@ -441,18 +446,33 @@ def test_ks_and_rfm_use_range_scan_not_global_window(spark):
         stats.global_cumsum(ev, ["value", "event_id"], ["value"], pin=False)
     ).lower()
     assert "rangepartitioning" in lazy
+    # A data window may appear (r15: rfm's fused melt keeps the two-phase
+    # scan lazy behind pin="defer", so its partition-local window is
+    # visible in the plan again), and so may the global offsets window
+    # over the num_ranges-row frame, which orders by the range id `_pid`
+    # alone.  A global window ordered by anything else is the
+    # single-task data window this test exists to forbid.
+    from pyspark.sql import Window
+
+    planted = ev.withColumn("r", F.row_number().over(Window.orderBy("value")))
+    assert _global_data_windows(_plan(planted))  # the guard can fail
     for name in ("ks_two_sample_values", "rfm_segmentation"):
         plan = _plan(CATALOG[name][0](spark, SF))
-        for line in plan.splitlines():
-            s = line.lstrip(" :+-*")
-            # a data window may appear (r15: rfm's fused melt keeps the
-            # two-phase scan lazy behind pin="defer", so its
-            # partition-local window is visible in the plan again) but
-            # it must be PARTITIONED — `Window [exprs], [], [order]`
-            # with an empty partition group would be the global
-            # single-task window this test exists to forbid
-            if s.startswith("Window "):
-                assert ", [], [" not in s, (name, s)
+        assert not _global_data_windows(plan), name
+
+
+def _global_data_windows(plan: str) -> list[str]:
+    """Global Window lines (tools/plan_lint.py's parse) whose ordering is
+    not exactly the `_pid` range id."""
+    from plan_lint import _window_nodes, bracket_groups
+
+    bad = []
+    for line, is_global in _window_nodes(plan):
+        groups = bracket_groups(line)
+        keys = groups[-1][1:-1].split(", ") if len(groups) == 2 else [""]
+        if is_global and not all(k.startswith("_pid#") for k in keys):
+            bad.append(line)
+    return bad
 
 
 def test_chi2_and_mi_margins_broadcast(spark):

@@ -164,6 +164,23 @@ def _source_scan_count(plan: str) -> int:
     return count
 
 
+def bracket_groups(line: str) -> list[str]:
+    """The top-level ``[...]`` groups of a plan line, brackets included."""
+    groups: list[str] = []
+    depth, start = 0, None
+    for i, ch in enumerate(line):
+        if ch == "[":
+            if depth == 0:
+                start = i
+            depth += 1
+        elif ch == "]":
+            depth -= 1
+            if depth == 0 and start is not None:
+                groups.append(line[start : i + 1])
+                start = None
+    return groups
+
+
 def _window_nodes(plan: str):
     """Yield (line, is_global) per Window operator line.
 
@@ -176,18 +193,7 @@ def _window_nodes(plan: str):
         stripped = line.lstrip(" :+-*")
         if not stripped.startswith("Window "):
             continue
-        groups: list[str] = []
-        depth, start = 0, None
-        for i, ch in enumerate(stripped):
-            if ch == "[":
-                if depth == 0:
-                    start = i
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-                if depth == 0 and start is not None:
-                    groups.append(stripped[start : i + 1])
-                    start = None
+        groups = bracket_groups(stripped)
         if len(groups) >= 3:
             is_global = False
         elif len(groups) == 2:
